@@ -50,7 +50,6 @@ def curation_flags(
     min_quality: float = 0.2,
     max_dup_3gram: float = 0.5,
     eval_docs: DataFrame | None = None,
-    reliable_checkpoint: bool = False,
     containment: bool | str = False,
 ) -> DataFrame:
     """Per-doc keep/drop flags for every stage: (doc_id, lang,
@@ -72,7 +71,7 @@ def curation_flags(
       depends on the other stages' outcome, which is exactly the
       point; the pair join runs on the (smaller) survivor set. The
       construction references the other flags' subplan twice — the
-      heavy LSH/CC stage is localCheckpoint-materialized inside
+      heavy LSH/CC stage is materialized by the lineage cuts inside
       connected_components so it is built once; the remaining
       recompute is one extra hash-dedup shuffle + decontam pass over
       ``docs`` (persist ``docs`` upstream if that matters).
@@ -94,11 +93,9 @@ def curation_flags(
     # 2. near-dup: component canon survives — the SAME pipeline (and
     # constants) the oracle-certified doc_dedup_groups/doc_dedup_corpus
     # queries run, single-sourced in operators/dedup.lsh_near_dup_pairs.
-    pairs = dedup.lsh_near_dup_pairs(
-        docs, reliable_checkpoint=reliable_checkpoint
-    ).select("id_a", "id_b")
+    pairs = dedup.lsh_near_dup_pairs(docs).select("id_a", "id_b")
     dropped_nd = (
-        dedup.connected_components(pairs, reliable_checkpoint=reliable_checkpoint)
+        dedup.connected_components(pairs)
         .filter(F.col("canon_id") < F.col("doc_id"))
         .select("doc_id")
         .withColumn("_nd_drop", F.lit(True))
@@ -247,9 +244,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="attach the per-doc DSIR importance score column")
     ap.add_argument("--vocab-stats", action="store_true",
                     help="report per-source OOV stats of the shipped corpus")
-    # cluster mode: CC lineage truncation via reliable checkpoint()
-    # (requires spark.checkpoint.dir, see k8s/spark/curation-job.yaml)
-    ap.add_argument("--reliable-checkpoint", action="store_true")
     args = ap.parse_args(argv)
 
     from flink_tank_spark.session import get_spark
@@ -271,7 +265,6 @@ def run(spark: SparkSession, args) -> int:
         containment_mode = "survivors"
     flags = curation_flags(
         docs, args.min_quality, args.max_dup_3gram, eval_docs,
-        reliable_checkpoint=getattr(args, "reliable_checkpoint", False),
         containment=containment_mode,
     ).persist()  # consumed twice (corpus write + funnel stats): compute once
     corpus = None

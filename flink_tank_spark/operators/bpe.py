@@ -44,7 +44,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_tank_spark import materialize
+from flink_tank_spark.plans import shared
 
 WORD_REGEX = r"([a-z]+)"
 END_MARK = "</w>"
@@ -217,12 +217,11 @@ def train_merges_incremental(
 
     Lineage control: the rewrite is one chained ``replace`` projection
     per step over the persisted base; every ``checkpoint_every`` steps
-    the chain is truncated with ``materialize.ckpt(eager=True)`` (local
-    checkpoint, or reliable under SPARK_GRAFT_RELIABLE_CKPT) so the
-    per-job evaluation depth — and Catalyst's analysis time — stays
-    bounded (the k-means/CC lesson from operators/similarity.py). On a
-    real cluster swap in reliable ``checkpoint()`` exactly as GraphX
-    does.
+    the chain is truncated with ``shared.cut(eager=True)`` (a local
+    checkpoint, or reliable ``checkpoint()`` on a cluster, exactly as
+    GraphX does) so the per-job evaluation depth — and Catalyst's
+    analysis time — stays bounded (the k-means/CC lesson from
+    operators/similarity.py).
 
     Bit-identical to :func:`train_merges` (pinned in tests/test_bpe.py):
     same counts, same max-count-then-lexicographic tie-break (pure ASCII
@@ -291,7 +290,7 @@ def train_merges_incremental(
                         stats["argmax_sec"] += time.perf_counter() - _t0
         cur = cur.withColumn("syms", new_syms)
         if step % checkpoint_every == 0:
-            cur = materialize.ckpt(cur, eager=True)
+            cur = shared.cut(cur, eager=True)
     return merges
 
 
@@ -455,7 +454,7 @@ def train_merges_incremental_batched(
         since_checkpoint += len(new_merges)
         rounds_since += 1
         if since_checkpoint >= checkpoint_every or rounds_since >= 8:
-            cur = materialize.ckpt(cur, eager=True)
+            cur = shared.cut(cur, eager=True)
             since_checkpoint = 0
             rounds_since = 0
     return merges

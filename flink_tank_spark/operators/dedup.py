@@ -15,12 +15,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from flink_tank_spark import materialize
-
 from flink_tank_spark.operators.text import (
     lsh_band_buckets,
     shingles_from_words,
 )
+from flink_tank_spark.plans import shared
 
 
 def exact_dedup_stats(
@@ -221,7 +220,6 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     rows_per_band: int = 2,
     max_bucket_size: int | None = None,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """MinHash-LSH blocking: docs sharing any band bucket become
     candidate pairs. Scale shape: explode to (band, bucket, doc), join
@@ -239,16 +237,10 @@ def lsh_candidate_pairs(
     # signature subtree re-evaluated per reference — for callers that
     # do NOT pass a pre-persisted signature table (e.g. the curation
     # job) that meant three full md5 passes over the corpus. Bounded:
-    # one row per (doc, band). ``reliable_checkpoint`` swaps in
-    # ``checkpoint()`` (the connected_components/pagerank cluster
-    # discipline: executor loss must not strand the materialization;
-    # requires a checkpoint dir — ``spark.checkpoint.dir`` conf,
-    # ``SPARK_GRAFT_CKPT_DIR`` env, or setCheckpointDir — see
-    # flink_tank_spark/materialize.py; None = the session-level
-    # SPARK_GRAFT_RELIABLE_CKPT policy); checkpointed values are the
+    # one row per (doc, band). A shared.cut: reliable on a cluster, so
+    # executor loss cannot strand it; checkpointed values are the
     # computed values either way.
-    stacked = lsh_bucket_rows(signatures, id_col, rows_per_band)
-    stacked = materialize.ckpt(stacked, reliable=reliable_checkpoint)
+    stacked = shared.cut(lsh_bucket_rows(signatures, id_col, rows_per_band))
     if max_bucket_size is not None:
         sizes = stacked.groupBy("bucket").agg(F.count(F.lit(1)).alias("_bsz"))
         stacked = stacked.join(
@@ -274,7 +266,6 @@ def lsh_near_dup_pairs(
     text_col: str = "text",
     shingled: DataFrame | None = None,
     sigs: DataFrame | None = None,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """End-to-end near-dup pair detection: shingle → MinHash → LSH
     blocking (bucket-capped) → exact Jaccard rescore ≥ ``threshold``.
@@ -308,16 +299,13 @@ def lsh_near_dup_pairs(
         id_col=id_col,
         rows_per_band=rows_per_band,
         max_bucket_size=max_bucket_size,
-        reliable_checkpoint=reliable_checkpoint,
     )
     return rescore_jaccard(cands, shingled, id_col=id_col).filter(
         F.col("jaccard") >= threshold
     )
 
 
-def connected_components(
-    pairs: DataFrame, iters: int = 30, reliable_checkpoint: bool | None = None
-) -> DataFrame:
+def connected_components(pairs: DataFrame, iters: int = 30) -> DataFrame:
     """Duplicate-group resolution: connected components over a near-dup
     pair graph via min-label propagation — (doc_id, canon_id) where
     canon_id is the smallest doc id in the component.
@@ -339,27 +327,18 @@ def connected_components(
     RuntimeError (split labels would silently under-deduplicate
     downstream — never return them).
 
-    ``reliable_checkpoint``: iterative lineage control. ``False`` (local
-    mode / tests): ``localCheckpoint`` — executor-storage truncation,
-    cheap but lost on executor failure. ``True`` (cluster): reliable
-    ``checkpoint()`` to the configured checkpoint dir (required:
-    ``spark.checkpoint.dir`` conf / ``SPARK_GRAFT_CKPT_DIR`` env /
-    ``setCheckpointDir`` — materialize.py applies the env fallback) —
-    the same per-iteration discipline GraphX/Pregel applies, survives
-    executor loss. ``None`` (default): the session-level
-    ``SPARK_GRAFT_RELIABLE_CKPT`` policy decides (materialize.py).
+    Iterative lineage control is :func:`shared.cut`: ``localCheckpoint``
+    under a local master, reliable ``checkpoint()`` on a cluster — the
+    same per-iteration discipline GraphX/Pregel applies, which survives
+    executor loss.
     """
     # Lineage control matters twice here: labels_i references labels_{i-1}
     # twice and edges once, so an untruncated loop builds a 2^iters-node
     # plan (112 s in Catalyst analysis alone on a 25-pair graph).
-    def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-        return materialize.ckpt(df, reliable=reliable_checkpoint, eager=eager)
-
     # Lazy: edges materialize with the first boundary job, not at build.
-    edges = ckpt(
+    edges = shared.cut(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))),
-        eager=False,
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
@@ -382,7 +361,7 @@ def connected_components(
         # checkpoints the plan only quadruples over a cheap scan node, and
         # each skipped boundary saves one sequential materialization job.
         if i % 2 == 1 or i == iters - 1:
-            labels = ckpt(labels)
+            labels = shared.cut(labels, eager=True)
             changed = labels.agg(F.sum("_chg")).first()[0]
             if not changed:
                 break

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flink_tank_spark import materialize
+from flink_tank_spark.plans import shared
 
 PR_SCALE = 1_000_000  # scaled fixed-point: 1.0 == 1e6
 PR_BASE = 150_000  # (1 - d) * SCALE with d = 0.85
@@ -42,7 +42,6 @@ def pagerank_scaled(
     edges: DataFrame,
     id_col: str = "doc_id",
     iters: int = 5,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Fixed-iteration damped PageRank over an undirected edge list.
 
@@ -60,20 +59,15 @@ def pagerank_scaled(
     ``edges_d`` once per round, and un-materialized those subtrees
     re-evaluate per reference (profiled: six separate 64-task scan
     stages of the node list in one cold build). They are
-    checkpoint-materialized once (the triangle_counts/kcore discipline:
-    localCheckpoint in local mode, reliable ``checkpoint()`` on a
-    cluster via ``reliable_checkpoint``); checkpointed values are the
-    computed values, so results are unchanged.
+    materialized once by :func:`shared.cut` (the triangle_counts/kcore
+    discipline); checkpointed values are the computed values, so results
+    are unchanged.
     """
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return materialize.ckpt(df, reliable=reliable_checkpoint)
-
-    nodes = ckpt(nodes.select(F.col(id_col)))
-    deg = ckpt(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    nodes = shared.cut(nodes.select(F.col(id_col)))
+    deg = shared.cut(edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     # Degree rides along with each edge so the per-iteration work is one
     # join against ranks + one aggregation; built once, reused per round.
-    edges_d = ckpt(edges.join(deg, "src"))
+    edges_d = shared.cut(edges.join(deg, "src"))
 
     ranks = nodes.select(
         F.col(id_col), F.lit(PR_SCALE).cast("long").alias("pr_scaled")
@@ -115,9 +109,7 @@ def pagerank_scaled(
 CC_SCALE = 1_000_000  # clustering coefficient ppm: 1.0 == 1e6
 
 
-def triangle_counts(
-    pairs: DataFrame, id_col: str = "doc_id", reliable_checkpoint: bool | None = None
-) -> DataFrame:
+def triangle_counts(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Per-node triangle counts + local clustering coefficient over an
     undirected edge list (``id_a`` < ``id_b``, one row per edge).
 
@@ -150,19 +142,15 @@ def triangle_counts(
     ``tris`` three more — un-materialized, the wedge join re-evaluated
     up to 9× and the profiled cold run launched ~95 near-empty AQE jobs
     whose scheduling/codegen overhead dwarfed the actual compute.
-    Both subtrees are checkpoint-materialized once (the
-    connected_components/kcore discipline: localCheckpoint in local
-    mode, reliable ``checkpoint()`` on a cluster), and the per-corner
-    counts fold into ONE pass via explode instead of a 3-way union.
+    Both subtrees are materialized once by :func:`shared.cut` (the
+    connected_components/kcore discipline), and the per-corner counts
+    fold into ONE pass via explode instead of a 3-way union.
     Checkpointed values are the computed values — results unchanged.
     """
 
-    def ckpt(df: DataFrame) -> DataFrame:
-        return materialize.ckpt(df, reliable=reliable_checkpoint)
-
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     und = edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    deg = ckpt(und.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
+    deg = shared.cut(und.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
 
     # Attach both endpoint degrees, orient low (deg, id) -> high.
     e = (
@@ -175,7 +163,7 @@ def triangle_counts(
     fwd = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("src") < F.col("dst"))
     )
-    oriented = ckpt(
+    oriented = shared.cut(
         e.select(
             F.when(fwd, F.col("src")).otherwise(F.col("dst")).alias("src"),
             F.when(fwd, F.col("dst")).otherwise(F.col("src")).alias("dst"),
@@ -227,7 +215,6 @@ def kcore(
     k: int = 2,
     id_col: str = "doc_id",
     iters: int = 40,
-    reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """k-core decomposition by iterative peeling: repeatedly delete
     nodes whose CURRENT degree is below ``k`` until none remain; the
@@ -253,15 +240,10 @@ def kcore(
     WITHIN the core (>= k by construction). Exact integers; any
     partitioning agrees.
     """
-
-    def ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-        return materialize.ckpt(df, reliable=reliable_checkpoint, eager=eager)
-
-    edges = ckpt(
+    edges = shared.cut(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")).union(
             pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        ),
-        eager=False,
+        )
     )
     for _ in range(iters):
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -271,9 +253,10 @@ def kcore(
                 deg.select(F.col("src").alias(id_col), F.col("deg").alias("core_degree"))
             )
         ok = deg.filter(F.col("deg") >= k).select("src")
-        edges = ckpt(
+        edges = shared.cut(
             edges.join(ok, "src", "left_semi").join(
                 ok.withColumnRenamed("src", "dst"), "dst", "left_semi"
-            ).select("src", "dst")
+            ).select("src", "dst"),
+            eager=True,
         )
     raise RuntimeError(f"kcore: no fixpoint after {iters} rounds (k={k})")

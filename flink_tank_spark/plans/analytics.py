@@ -15,10 +15,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from flink_tank_spark import materialize
 from flink_tank_spark.functions.numeric import dsum, sql_dsum
 from flink_tank_spark.io.tables import load_table
 from flink_tank_spark.operators import bloom
+from flink_tank_spark.plans import shared
 from flink_tank_spark.plans.registry import QuerySpec
 
 FUNNEL_STEPS = ("signup", "view", "purchase")
@@ -46,12 +46,10 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.4) so each step's filtered events scan + aggregation runs a
     # single time instead of once per reference. Both tables are
     # per-user (bounded far below the event volume at any scale).
-    # materialize.ckpt: localCheckpoint locally, reliable checkpoint()
-    # under the session-level SPARK_GRAFT_RELIABLE_CKPT policy (r15).
     t1 = ev.filter(F.col("event_type") == FUNNEL_STEPS[0]).groupBy("user_id").agg(
         F.min("ts").alias("t1")
     )
-    t1 = materialize.ckpt(t1)
+    t1 = shared.cut(t1)
     t2 = (
         ev.filter(F.col("event_type") == FUNNEL_STEPS[1])
         .join(t1, "user_id")
@@ -59,7 +57,7 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
     )
-    t2 = materialize.ckpt(t2)
+    t2 = shared.cut(t2)
     t3 = (
         ev.filter(F.col("event_type") == FUNNEL_STEPS[2])
         .join(t2, "user_id")

@@ -23,7 +23,6 @@ from flink_tank_spark.functions.numeric import sql_davg
 from flink_tank_spark.io.tables import load_table
 from flink_tank_spark.operators import dedup, multimodal, similarity, text
 from flink_tank_spark.operators.skew import spread_partitions
-from flink_tank_spark import materialize
 from flink_tank_spark.plans import shared
 from flink_tank_spark.plans.registry import QuerySpec
 
@@ -419,17 +418,11 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     from flink_tank_spark.operators import retrieval
 
     docs = load_table(spark, sf_dir, "documents")
-    # shared.plan: constructing the retrieval DAG costs driver-side py4j
-    # time per rep for an identical plan — memoize the OBJECT, results
-    # still recompute per action (r15).
-    return shared.plan(
-        spark, "doc_bm25_topk", (sf_dir, k),
-        lambda: retrieval.bm25_topk(
-            docs, query_ids=range(5), k=k, posts=_word_postings(spark, sf_dir),
-            term_stats=_word_term_stats(spark, sf_dir),
-            stats=_word_corpus_stats(spark, sf_dir),
-        ).orderBy("query_id", "rk"),
-    )
+    return retrieval.bm25_topk(
+        docs, query_ids=range(5), k=k, posts=_word_postings(spark, sf_dir),
+        term_stats=_word_term_stats(spark, sf_dir),
+        stats=_word_corpus_stats(spark, sf_dir),
+    ).orderBy("query_id", "rk")
 
 
 def _bm25_exact_sql(n_queries: int = 5, k: int = 10) -> str:
@@ -566,14 +559,11 @@ def doc_bm25_wand(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     from flink_tank_spark.operators import retrieval
 
     docs = load_table(spark, sf_dir, "documents")
-    return shared.plan(
-        spark, "doc_bm25_wand", (sf_dir, k),
-        lambda: retrieval.bm25_wand_topk(
-            docs, query_ids=range(5), k=k, posts=_word_postings(spark, sf_dir),
-            term_stats=_word_term_stats(spark, sf_dir),
-            stats=_word_corpus_stats(spark, sf_dir),
-        ).orderBy("query_id", "rk"),
-    )
+    return retrieval.bm25_wand_topk(
+        docs, query_ids=range(5), k=k, posts=_word_postings(spark, sf_dir),
+        term_stats=_word_term_stats(spark, sf_dir),
+        stats=_word_corpus_stats(spark, sf_dir),
+    ).orderBy("query_id", "rk")
 
 
 def doc_bm25_wand_batch64(
@@ -592,14 +582,11 @@ def doc_bm25_wand_batch64(
     from flink_tank_spark.operators import retrieval
 
     docs = load_table(spark, sf_dir, "documents")
-    return shared.plan(
-        spark, "doc_bm25_wand_batch64", (sf_dir, k),
-        lambda: retrieval.bm25_wand_topk(
-            docs, query_ids=range(64), k=k, posts=_word_postings(spark, sf_dir),
-            term_stats=_word_term_stats(spark, sf_dir),
-            stats=_word_corpus_stats(spark, sf_dir),
-        ).orderBy("query_id", "rk"),
-    )
+    return retrieval.bm25_wand_topk(
+        docs, query_ids=range(64), k=k, posts=_word_postings(spark, sf_dir),
+        term_stats=_word_term_stats(spark, sf_dir),
+        stats=_word_corpus_stats(spark, sf_dir),
+    ).orderBy("query_id", "rk")
 
 
 # the signature derivation as a reusable CTE block — doc_simhash reads
@@ -1681,18 +1668,19 @@ def emb_pq_topk(
     emb = spread_partitions(load_table(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 10)
 
-    # The PQ train->encode->reconstruct chain lives INSIDE the stage
-    # builder (r15): the fused Lloyd trainers run their iteration jobs
-    # at DataFrame-construction time, so building recon outside the
-    # lambda retrained all four codebooks on every rep even when the
-    # staged coarse table was already cached (profiled: 45 warm jobs).
-    def _coarse() -> DataFrame:
-        recon = similarity.pq_reconstruct(emb).select(
+    # The staged index is the reconstructed corpus only; the ADC top-k
+    # over it is query work and runs on every call. The PQ
+    # train->encode->reconstruct chain lives INSIDE the stage builder
+    # (r15): the fused Lloyd trainers run their iteration jobs at
+    # DataFrame-construction time, so building recon outside the lambda
+    # retrained all four codebooks on every rep (profiled: 45 warm jobs).
+    recon = shared.stage(
+        spark, "emb_pq_recon", sf_dir,
+        lambda: similarity.pq_reconstruct(emb).select(
             "vec_id", F.col("rvec").alias("embedding")
-        )
-        return similarity.cosine_topk(recon, queries, k=coarse_k)
-
-    coarse = shared.stage(spark, "emb_pq_coarse", (sf_dir, coarse_k), _coarse)
+        ),
+    )
+    coarse = similarity.cosine_topk(recon, queries, k=coarse_k)
     adc_top = coarse.filter(F.col("rk") <= k).select(
         F.col("query_id").alias("p_qid"), F.col("neighbor_id").alias("p_nid")
     )
@@ -3238,9 +3226,7 @@ def doc_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return source_overlap_from_shingles(sh)
 
 
-def source_overlap_from_shingles(
-    sh: DataFrame, reliable_checkpoint: bool | None = None
-) -> DataFrame:
+def source_overlap_from_shingles(sh: DataFrame) -> DataFrame:
     """Finalize: pairwise overlap from a DISTINCT (source, g) shingle
     table. Shared verbatim by the batch query above and the streaming
     view (streaming/source_overlap.py) — parity is structural, the
@@ -3250,20 +3236,12 @@ def source_overlap_from_shingles(
     two sizes broadcasts) — un-materialized, the whole upstream
     explode+distinct re-evaluated per reference (profiled at sf0.1:
     four identical 3.7 M-row map stages in one cold build, 23 jobs).
-    Checkpoint-materialized once (r14, guide §2.4 — the established
-    graph/LSH discipline; ``reliable_checkpoint`` swaps in
-    ``checkpoint()`` for cluster deployments, and the default ``None``
-    resolves from the session-level ``SPARK_GRAFT_RELIABLE_CKPT``
-    policy — materialize.py — so the registry entry point is
-    cluster-safe without per-call plumbing). ``sizes`` likewise backs
-    two broadcasts and is one bounded row per source. Checkpointed
-    values are the computed values — results unchanged."""
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return materialize.ckpt(df, reliable=reliable_checkpoint)
-
-    sh = _ckpt(sh)
-    sizes = _ckpt(sh.groupBy("source").agg(F.count(F.lit(1)).alias("n")))
+    Materialized once by :func:`shared.cut` (r14, guide §2.4 — the
+    established graph/LSH discipline, reliable on a cluster). ``sizes``
+    likewise backs two broadcasts and is one bounded row per source.
+    Checkpointed values are the computed values — results unchanged."""
+    sh = shared.cut(sh)
+    sizes = shared.cut(sh.groupBy("source").agg(F.count(F.lit(1)).alias("n")))
     common = (
         sh.select(F.col("source").alias("source_a"), "g")
         .join(sh.select(F.col("source").alias("source_b"), "g"), "g")

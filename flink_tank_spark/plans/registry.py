@@ -142,17 +142,19 @@ def all_queries() -> dict[str, QuerySpec]:
 
 
 def _prepared(spec: QuerySpec) -> QuerySpec:
-    """Prepared-query plan cache (r15, guide §5): re-invoking a registry
-    query re-ran its full Python-side DataFrame construction — measured
-    at 0.4–1.6 s of py4j round-trips per rep on the heavy plans (the
-    WAND DAG: 2,122 gateway calls; doc_dedup_groups: the CC convergence
-    loop) — to produce an identical plan. The registry entry point now
-    memoizes the BUILT DataFrame per (application, query, sf_dir)
-    through plans/shared.plan: results are NOT cached — every action on
-    the returned frame re-executes its plan — only the construction is
-    skipped, the same contract a prepared statement gives a SQL engine.
-    Direct calls to the underlying plan functions (tests, scripts) are
-    untouched, and shared.DISABLE bypasses the cache for plan audits."""
+    """Prepared-query plan cache (r15, guide §5), the only caller of
+    plans/shared.plan: re-invoking a registry query re-ran its full
+    Python-side DataFrame construction — measured at 0.4–1.6 s of py4j
+    round-trips per rep on the heavy plans (the WAND DAG: 2,122 gateway
+    calls) — to produce an identical plan. The entry point memoizes the
+    analyzed plan per (application, query, sf_dir), with the contract of
+    :func:`shared.plan`: a query whose plan holds a stored result (a
+    lineage cut, re-parallelized driver rows) is rebuilt on every call;
+    any other is built once, and every action on the returned frame
+    still re-executes it — only the construction is skipped, as a
+    prepared statement does in a SQL engine. Direct calls to the
+    underlying plan functions (tests, scripts) are untouched, and
+    shared.DISABLE bypasses the cache for plan audits."""
     from flink_tank_spark.plans import shared
 
     fn = spec.spark

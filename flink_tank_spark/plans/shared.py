@@ -1,44 +1,38 @@
-"""Session-scoped shared-stage cache for multi-query pipelines.
+"""Session reuse: the one module that decides how work is reused inside
+a Spark application. Three named kinds, each with one lifetime:
 
-Several registry queries are stages of ONE pipeline run back-to-back by
-the driver in a single session:
+- :func:`stage` — an index stage (shingle sets, signatures, postings,
+  centroids) that several registry queries of ONE pipeline share. Built
+  once per (application, name, params) and held until the params change
+  or :func:`clear`; a name holds at most one entry, so cache growth is
+  O(#stage names) for any session lifetime.
+- :func:`plan` — a prepared plan: the registry entry point memoizes
+  CONSTRUCTION only; every action re-executes.
+- :func:`cut` — a lineage cut: materialize a multi-referenced subtree
+  (graph loops, LSH candidate rows, funnel steps) and truncate its
+  lineage so it is evaluated once.
 
-- shingle sets  -> minhash -> LSH pairs -> CC groups -> keep-one corpus
-- IVF assignment -> embedding near-dup pairs -> semantic dedup
-- k-means cells -> ANN top-k -> recall@5 audit (vs the exact top-k)
+How cuts and stages are made follows from the session master alone
+(:func:`reliable_dir`):
 
-Rebuilding the common prefix per query wastes the dominant cost (the
-md5-heavy shingling, the Lloyd training scans), and the round-2 fix of
-calling ``.persist()`` inside one builder leaked: every re-invocation
-re-persisted an identical plan (Spark's CacheManager warns "Asked to
-cache already cached data") and nothing ever unpersisted, so a
-long-lived session accumulated caches.
+- ``local`` / ``local[...]``: cuts are ``localCheckpoint`` and stages
+  a ``MEMORY_AND_DISK`` persist — cheapest, and executor loss is moot.
+- anything else (a cluster, including ``local-cluster[...]``): cuts are
+  reliable ``checkpoint()`` and stages are parquet under
+  ``<checkpoint dir>/stages/<applicationId>/<name>-<params hash>``, so
+  executor loss cannot strand a materialization and cached stages never
+  compete with execution memory. The dir is ``spark.checkpoint.dir``
+  (set by conf/spark-defaults-100tb.conf and k8s/spark/curation-job.yaml);
+  without it the first cut or stage raises before any job runs.
 
-``stage`` fixes both: each shared stage is persisted exactly once per
-(application, stage-name) and re-invocations return the SAME DataFrame
-object. The cache holds at most one entry per stage name — building the
-same stage with different parameters (another sf_dir, another threshold)
-unpersists and replaces the old entry, bounding cache growth at
-O(#stage names) for any session lifetime. ``clear`` unpersists
-everything (tests / long-running services / before memory-hungry jobs).
-
-At 100 TB the same structure holds — the persisted stages are either
-per-doc maps (shingle sets: corpus-sized but MEMORY_AND_DISK, evictable)
-or tiny derived tables (near-dup pairs, centroids); on a cluster, set
-``SPARK_GRAFT_STAGE_DIR`` (r15, the cluster-safe materialization switch
-— companion to materialize.py's SPARK_GRAFT_RELIABLE_CKPT): each stage
-is then written to parquet under ``<dir>/<applicationId>/<name>`` on
-first use and read back, so executor churn cannot evict it and cache
-pressure never competes with execution memory (guide §5). The path is
-keyed by applicationId — a fresh run always rebuilds from the inputs
-(NO cross-run result reuse; this is durability of a within-session
-intermediate, exactly what persist provided, not precomputation).
-Local default unchanged: in-memory persist.
+Stage paths are keyed by applicationId, so a fresh run always rebuilds
+from its inputs: this is durability of a within-session intermediate,
+not cross-run result reuse.
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 import re
 from collections.abc import Callable
 from typing import Any
@@ -46,7 +40,7 @@ from typing import Any
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-# (app_id, stage_name) -> (params, persisted DataFrame)
+# (app_id, name) -> (params, DataFrame)
 _cache: dict[tuple[str, str], tuple[Any, DataFrame]] = {}
 
 # Escape hatch for plan audits: when True, builders run un-persisted and
@@ -55,39 +49,76 @@ _cache: dict[tuple[str, str], tuple[Any, DataFrame]] = {}
 DISABLE = False
 
 
+def _is_local(master: str) -> bool:
+    return master == "local" or master.startswith("local[")
+
+
+def reliable_dir(sc) -> str | None:
+    """The one materialization decision: ``None`` under a local master,
+    else the reliable checkpoint dir that cuts and stages are written
+    under. A cluster master without ``spark.checkpoint.dir`` raises."""
+    if _is_local(sc.master):
+        return None
+    d = sc.getCheckpointDir()
+    if not d:
+        raise RuntimeError(
+            f"master {sc.master!r} runs cluster mode, which materializes "
+            "lineage cuts and shared stages reliably: set "
+            "spark.checkpoint.dir to a durable directory"
+        )
+    return d
+
+
+def cut(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage (see module doc).
+    Checkpointed values are the computed values in either mode."""
+    if reliable_dir(df.sparkSession.sparkContext) is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)
+
+
 def stage(
     spark: SparkSession,
     name: str,
     params: Any,
     builder: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Return the persisted shared stage ``name``, building it on first use.
+    """Return the shared stage ``name``, building it on first use.
 
     ``params`` identifies the build inputs (sf_dir + tuning knobs); a
-    call with different params rebuilds and replaces the cached entry
-    (the old one is unpersisted — blocking=False, eviction is async).
+    call with different params rebuilds and replaces the entry (the old
+    one is unpersisted — blocking=False, eviction is async; a parquet
+    stage keeps its own path, so frames already handed out still read
+    their rows).
     """
     if DISABLE:
         return builder()
-    key = (spark.sparkContext.applicationId, name)
+    sc = spark.sparkContext
+    key = (sc.applicationId, name)
     hit = _cache.get(key)
     if hit is not None and hit[0] == params:
         return hit[1]
     if hit is not None:
         _drop(key)
-    stage_dir = os.environ.get("SPARK_GRAFT_STAGE_DIR")
-    if stage_dir:
-        # Cluster mode: parquet-materialize the stage (survives executor
-        # loss, no cache pressure). Session-scoped path — a rebuild with
-        # different params overwrites it; a new application rebuilds.
+    root = reliable_dir(sc)
+    if root is None:
+        df = builder().persist(StorageLevel.MEMORY_AND_DISK)
+    else:
+        digest = hashlib.sha1(repr(params).encode()).hexdigest()[:12]
         safe = re.sub(r"[^A-Za-z0-9_.-]", "_", name)
-        path = os.path.join(stage_dir, spark.sparkContext.applicationId, safe)
+        path = f"{root.rstrip('/')}/stages/{sc.applicationId}/{safe}-{digest}"
         builder().write.mode("overwrite").parquet(path)
         df = spark.read.parquet(path)
-    else:
-        df = builder().persist(StorageLevel.MEMORY_AND_DISK)
     _cache[key] = (params, df)
     return df
+
+
+def _has_rdd_leaf(jplan) -> bool:
+    leaves = jplan.collectLeaves()
+    return any(
+        leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+        for i in range(leaves.size())
+    )
 
 
 def plan(
@@ -96,21 +127,28 @@ def plan(
     params: Any,
     builder: Callable[[], DataFrame],
 ) -> DataFrame:
-    """Memoize a query's ANALYZED LOGICAL PLAN per session and return a
-    FRESH Dataset over it on every call — the prepared-statement
-    contract. Motivation (r15, measured): building the WAND retrieval
-    DAG costs 1.5–2 s of py4j round-trips (2,122 gateway calls) PER REP
-    — pure driver-side re-construction of an identical plan.
+    """Prepared plan: memoize a query's ANALYZED LOGICAL PLAN per
+    session and return a FRESH Dataset over it on every call.
 
-    Returning the SAME DataFrame object would be faster still, but
-    dishonestly so: a re-collected DataFrame reuses its QueryExecution's
-    materialized AQE shuffle stages, so repeat runs skip nearly all
-    execution (measured: tbl_profile_lineitem 2.7 s fresh vs 0.085 s
-    same-object) — result caching in disguise. ``Dataset.ofRows`` over
-    the cached analyzed plan creates a new QueryExecution each call:
-    every exchange re-executes, only the Python-side construction is
-    skipped. Same keying/replacement semantics as :func:`stage`;
-    entries share the cache and are dropped by :func:`clear`."""
+    Contract:
+
+    - a builder whose analyzed plan has no ``LogicalRDD`` leaf runs
+      once per (name, params); each returned frame gets a new
+      QueryExecution, so every action on it launches Spark jobs and
+      re-executes every exchange — only the Python-side construction
+      (0.4–1.6 s of py4j on the WAND and CC plans) is skipped, as with
+      a SQL prepared statement;
+    - a builder whose plan has such a leaf — a :func:`cut`, or
+      driver-side rows re-parallelized by ``createDataFrame`` — runs
+      again on every call and its own frame is returned: that leaf is a
+      stored result, and memoizing it would serve the result instead of
+      recomputing it.
+
+    Returning the SAME DataFrame object would not honour the first
+    point: a re-collected DataFrame reuses its QueryExecution's
+    materialized AQE shuffle stages (measured: tbl_profile_lineitem
+    2.7 s fresh vs 0.085 s same-object). Entries share the stage cache
+    and are dropped by :func:`clear`."""
     if DISABLE:
         return builder()
     key = (spark.sparkContext.applicationId, "plan:" + name)
@@ -121,6 +159,8 @@ def plan(
         if hit is not None:
             _drop(key)
         cached = builder()
+        if _has_rdd_leaf(cached._jdf.queryExecution().analyzed()):
+            return cached
         _cache[key] = (params, cached)
     jplan = cached._jdf.queryExecution().analyzed()
     jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
@@ -142,8 +182,8 @@ def _drop(key: tuple[str, str]) -> None:
 
 
 def clear(spark: SparkSession | None = None) -> None:
-    """Unpersist and drop every cached stage (of one app, or all —
-    including entries whose SparkContext has since been stopped)."""
+    """Unpersist and drop every cached stage and plan (of one app, or
+    all — including entries whose SparkContext has since been stopped)."""
     app = spark.sparkContext.applicationId if spark is not None else None
     for key in list(_cache):
         if app is None or key[0] == app:

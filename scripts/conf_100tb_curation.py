@@ -7,9 +7,11 @@ decontamination → funnel stats — executed twice at the given SF:
 
 1. under the DEFAULT test session (the configuration every gate runs);
 2. under conf/spark-defaults-100tb.conf (8192 shuffle partitions, AQE
-   skew join, runtime bloom filters, RocksDB state store), with the
-   connected-components loop in reliable-checkpoint mode (the cluster
-   code path, spark.checkpoint.dir remapped to a local tmp dir).
+   skew join, runtime bloom filters, RocksDB state store), with
+   spark.checkpoint.dir remapped to a local tmp dir. The master stays
+   local[N], so lineage cuts stay local checkpoints: plans/shared.py
+   takes the reliable path from a cluster master only, and the slow
+   tests/test_cluster_checkpoint.py runs that path on local-cluster.
 
 Asserts the stage funnels are IDENTICAL (the cluster conf must not
 change results) and that the 100 TB plan introduces no
@@ -40,7 +42,7 @@ from scripts.conf_100tb_check import (  # noqa: E402
 )
 
 
-def run_job(spark, sf_dir: str, reliable_checkpoint: bool) -> tuple[dict, dict, float]:
+def run_job(spark, sf_dir: str) -> tuple[dict, dict, float]:
     from pyspark.sql import functions as F
 
     from flink_tank_spark.io.tables import load_table
@@ -49,9 +51,7 @@ def run_job(spark, sf_dir: str, reliable_checkpoint: bool) -> tuple[dict, dict, 
     docs = load_table(spark, sf_dir, "documents")
     eval_docs = docs.filter(F.col("doc_id") % 11 == 0).select("doc_id", "text")
     t0 = time.time()
-    flags = curation_flags(
-        docs, eval_docs=eval_docs, reliable_checkpoint=reliable_checkpoint
-    ).persist()
+    flags = curation_flags(docs, eval_docs=eval_docs).persist()
     try:
         funnel = funnel_stats(flags)
         wall = time.time() - t0
@@ -76,11 +76,11 @@ def main() -> int:
 
     spark = get_spark("curation-default", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    funnel_def, mix_def, wall_def = run_job(spark, args.sf_dir, False)
+    funnel_def, mix_def, wall_def = run_job(spark, args.sf_dir)
     spark.stop()
 
     # pass 2: the 100 TB conf (cluster-only keys remapped as in
-    # conf_100tb_check), reliable-checkpoint CC
+    # conf_100tb_check)
     conf = parse_conf(CONF_PATH)
     applied, remapped = {}, []
     for k, v in conf.items():
@@ -94,7 +94,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     ckpt = tempfile.mkdtemp(prefix="curation_ckpt_")
     spark.sparkContext.setCheckpointDir(ckpt)
-    funnel_tb, mix_tb, wall_tb = run_job(spark, args.sf_dir, True)
+    funnel_tb, mix_tb, wall_tb = run_job(spark, args.sf_dir)
     spark.stop()
 
     forbidden = [

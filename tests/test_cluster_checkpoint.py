@@ -1,10 +1,10 @@
 """Exercise connected_components' cluster path for real.
 
-``reliable_checkpoint=True`` swaps ``localCheckpoint`` (executor-storage
-truncation, lost on executor failure) for reliable ``checkpoint()`` to a
-checkpoint directory — the branch a cluster deployment runs. Until round
-4 it was dead code in tests. This runs it under ``local-cluster[2,1,*]``
-— Spark's real multi-process cluster harness: a standalone master plus
+Under any master other than ``local``/``local[...]``, plans/shared.cut
+swaps ``localCheckpoint`` (executor-storage truncation, lost on executor
+failure) for reliable ``checkpoint()`` into ``spark.checkpoint.dir`` —
+the branch a cluster deployment runs. No flag selects it: this runs it
+under ``local-cluster[2,1,*]`` — Spark's real multi-process cluster harness: a standalone master plus
 2 separate worker JVMs with 1 core each, so data genuinely crosses
 process boundaries through the reliable checkpoint files — and asserts
 the labels are identical to the plain local-mode run.
@@ -31,29 +31,30 @@ EXPECTED = {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20
 
 _DRIVER = textwrap.dedent(
     """
-    import json, sys, tempfile
+    import json, os, sys, tempfile
     from pyspark.sql import SparkSession
 
     pairs = json.loads(sys.argv[1])
-    spark = (
-        SparkSession.builder.master("local-cluster[2,1,1024]")
-        .appName("cc-reliable-ckpt")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     with tempfile.TemporaryDirectory() as ckpt_dir:
-        spark.sparkContext.setCheckpointDir(ckpt_dir)
+        spark = (
+            SparkSession.builder.master("local-cluster[2,1,1024]")
+            .appName("cc-reliable-ckpt")
+            .config("spark.checkpoint.dir", ckpt_dir)
+            .config("spark.sql.shuffle.partitions", "4")
+            .config("spark.ui.enabled", "false")
+            .config("spark.ui.showConsoleProgress", "false")
+            .getOrCreate()
+        )
+        spark.sparkContext.setLogLevel("ERROR")
         from flink_tank_spark.operators.dedup import connected_components
 
         df = spark.createDataFrame(pairs, ["id_a", "id_b"])
         labels = {
-            r.doc_id: r.canon_id
-            for r in connected_components(df, reliable_checkpoint=True).collect()
+            r.doc_id: r.canon_id for r in connected_components(df).collect()
         }
-    spark.stop()
+        n_files = sum(len(fs) for _, _, fs in os.walk(ckpt_dir))
+        spark.stop()
+    print("CKPT_FILES:" + str(n_files))
     print("LABELS:" + json.dumps(labels))
     """
 )
@@ -63,7 +64,7 @@ _DRIVER = textwrap.dedent(
     not os.environ.get("SPARK_GRAFT_SLOW_TESTS"),
     reason="local-cluster spin-up is slow; set SPARK_GRAFT_SLOW_TESTS=1",
 )
-def test_reliable_checkpoint_labels_match_local_mode(spark, tmp_path):
+def test_cluster_master_labels_match_local_mode(spark, tmp_path):
     env = dict(os.environ, PYTHONPATH="/root/repo")
     proc = subprocess.run(
         [sys.executable, "-c", _DRIVER, json.dumps(PAIRS)],
@@ -77,6 +78,8 @@ def test_reliable_checkpoint_labels_match_local_mode(spark, tmp_path):
     assert line, proc.stdout[-2000:]
     cluster_labels = {int(k): v for k, v in json.loads(line[0][7:]).items()}
     assert cluster_labels == EXPECTED
+    files = [ln for ln in proc.stdout.splitlines() if ln.startswith("CKPT_FILES:")]
+    assert int(files[0][11:]) > 0, "the cluster master must take the reliable path"
 
     # same graph through the default local path on the session fixture
     from flink_tank_spark.operators.dedup import connected_components

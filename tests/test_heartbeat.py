@@ -69,89 +69,3 @@ def test_heartbeat_emits_and_decays(spark, tmp_path):
         ws = dt.datetime.strptime(r.windowStart, "%Y-%m-%dT%H:%M:%S.%fZ")
         we = dt.datetime.strptime(r.windowEnd, "%Y-%m-%dT%H:%M:%S.%fZ")
         assert (we - ws) == dt.timedelta(seconds=4)
-
-
-def test_heartbeat_tws_emits_decays_and_survives_restart(spark, tmp_path):
-    """transformWithStateInPandas heartbeat twin: same structural
-    contract as the GroupState version (cadence emission, per-type
-    counts, zero-count heartbeat, [end-window, end] bounds), plus a
-    stop/restart mid-run — the RocksDB-checkpointed window buffer and
-    registered timers must survive into the resumed query.
-
-    Timer semantics are wall-clock, so assertions are structural, not
-    an output-for-output diff against the legacy variant (two separate
-    runs would see different wall clocks by construction)."""
-    import datetime as dt
-
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState control channel needs protobuf "
-        "(shipped on real clusters, absent in this offline container)",
-    )
-    from flink_tank_spark.streaming.heartbeat_tws import (
-        sliding_metrics_heartbeat_tws,
-    )
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    with open(os.path.join(src, "b1.jsonl"), "w") as f:
-        for k, t in [("u1", "a"), ("u1", "b"), ("u1", "a"), ("u2", "c")]:
-            f.write(f'{{"originalId":"{k}","eventType":"{t}"}}\n')
-
-    def start():
-        raw = (
-            spark.readStream.schema("originalId string, eventType string")
-            .json(src)
-        )
-        metrics = sliding_metrics_heartbeat_tws(
-            raw, window_ms=4000, emit_every_ms=1000
-        )
-        return (
-            metrics.writeStream.format("memory")
-            .queryName("hb_tws_sink")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="500 milliseconds")
-            .start()
-        )
-
-    q = start()
-    try:
-        # let the first emissions land, then kill mid-window
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM hb_tws_sink").count() > 0:
-                break
-            time.sleep(0.5)
-    finally:
-        q.stop()
-    # restart from the checkpoint: buffered events + timers must resume
-    q = start()
-    try:
-        deadline = time.time() + 40
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM hb_tws_sink").collect()
-            u1 = [r for r in rows if r.userId == "u1"]
-            if any(r.totalEventCount == 0 for r in u1) and any(
-                r.totalEventCount == 3 for r in u1
-            ):
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-
-    u1 = sorted((r for r in rows if r.userId == "u1"), key=lambda r: r.windowEnd)
-    assert u1, "no emissions for u1"
-    full = [r for r in u1 if r.totalEventCount == 3]
-    assert full, f"never saw the 3-event window: {[r.totalEventCount for r in u1]}"
-    assert json.loads(full[0].eventTypeCounts) == {"a": 2, "b": 1}
-    zero = [r for r in u1 if r.totalEventCount == 0]
-    assert zero, "no zero-count heartbeat after events aged out"
-    assert json.loads(zero[0].eventTypeCounts) == {}
-    for r in u1:
-        assert r.windowEnd.endswith(".000Z")
-        ws = dt.datetime.strptime(r.windowStart, "%Y-%m-%dT%H:%M:%S.%fZ")
-        we = dt.datetime.strptime(r.windowEnd, "%Y-%m-%dT%H:%M:%S.%fZ")
-        assert (we - ws) == dt.timedelta(seconds=4)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -293,24 +295,19 @@ def test_connected_components_converges_on_long_chain(spark):
     assert got == {i: 1 for i in range(1, 13)}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """reliable_checkpoint=True swaps localCheckpoint for checkpoint()
-    (cluster mode: survives executor loss); results are identical."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_connected_components_reliable_checkpoint(spark, cluster_mode):
+    """Cluster mode swaps localCheckpoint for reliable checkpoint()
+    (survives executor loss); results are identical."""
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
-    got = {
-        r.doc_id: r.canon_id
-        for r in dedup.connected_components(pairs, reliable_checkpoint=True).collect()
-    }
+    got = {r.doc_id: r.canon_id for r in dedup.connected_components(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert any(files for _, _, files in os.walk(cluster_mode)), "no reliable checkpoint written"
 
 
-def test_lsh_pairs_reliable_checkpoint(spark, tmp_path):
-    """reliable_checkpoint=True swaps the candidate stage's
-    localCheckpoint for checkpoint() (cluster mode: the r14 bucket-rows
-    materialization must survive executor loss); pairs are identical to
-    the default local path."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+def test_lsh_pairs_reliable_checkpoint(spark, cluster_mode, monkeypatch):
+    """Cluster mode swaps the candidate stage's localCheckpoint for
+    reliable checkpoint() (the r14 bucket-rows materialization must
+    survive executor loss); pairs are identical to the local path."""
     base = "the quick brown fox jumps over the lazy dog near the river bank"
     docs = spark.createDataFrame(
         [
@@ -320,13 +317,10 @@ def test_lsh_pairs_reliable_checkpoint(spark, tmp_path):
         ],
         ["doc_id", "text"],
     )
-    local = {
-        (r.id_a, r.id_b) for r in dedup.lsh_near_dup_pairs(docs).collect()
-    }
-    reliable = {
-        (r.id_a, r.id_b)
-        for r in dedup.lsh_near_dup_pairs(docs, reliable_checkpoint=True).collect()
-    }
+    reliable = {(r.id_a, r.id_b) for r in dedup.lsh_near_dup_pairs(docs).collect()}
+    assert any(files for _, _, files in os.walk(cluster_mode)), "no reliable checkpoint written"
+    monkeypatch.undo()  # back to local mode for the reference run
+    local = {(r.id_a, r.id_b) for r in dedup.lsh_near_dup_pairs(docs).collect()}
     assert reliable == local and (1, 2) in reliable
 
 

@@ -210,64 +210,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert [(e["user"], e["click_ts"]) for e in out] == [("u1", "2024-01-01T10:05:00.000Z")]
 
 
-def test_sequence_tws_matches_legacy_state_api(spark, tmp_path):
-    """transformWithStateInPandas sequence == applyInPandasWithState
-    sequence, including state carried across micro-batches."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState control channel needs protobuf "
-        "(shipped on real clusters, absent in this offline container)",
-    )
-    from flink_tank_spark.operators.parse import parse_and_route
-    from flink_tank_spark.streaming.sequence import with_sequence_stream
-    from flink_tank_spark.streaming.sequence_tws import with_sequence_stream_tws
-
-    msgs1 = [
-        '{"id":"user-1","type":"a","timestamp":1,"data":{}}',
-        '{"id":"user-2","type":"b","timestamp":2,"data":{}}',
-        '{"id":"user-1","type":"c","timestamp":3,"data":{}}',
-    ]
-    msgs2 = [
-        '{"id":"user-1","type":"d","timestamp":4,"data":{}}',
-        '{"id":"user-2","type":"e","timestamp":5,"data":{}}',
-    ]
-
-    def run(variant, seq_fn):
-        src = str(tmp_path / f"in-{variant}")
-        ckpt = str(tmp_path / f"ckpt-{variant}")
-        out_dir = str(tmp_path / f"out-{variant}")
-        for name, msgs in (("b1", msgs1), ("b2", msgs2)):
-            _write_batch(src, name, msgs)
-            raw = read_jsonl_stream(spark, src)
-            valid, _ = parse_and_route(raw)
-            seq = seq_fn(valid.select("id", "type", "timestamp", "data", "arrival"))
-            q = (
-                seq.select(F.to_json(F.struct("id", "type", "sequence")).alias("value"))
-                .writeStream.format("text")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-        out = []
-        for fn in os.listdir(out_dir):
-            if fn.startswith("part-"):
-                with open(os.path.join(out_dir, fn)) as f:
-                    out += [json.loads(line) for line in f if line.strip()]
-        return sorted((e["id"], e["type"], e["sequence"]) for e in out)
-
-    legacy = run("legacy", with_sequence_stream)
-    tws = run("tws", with_sequence_stream_tws)
-    assert legacy == tws
-    assert legacy == [
-        ("user-1", "a", 1), ("user-1", "c", 2), ("user-1", "d", 3),
-        ("user-2", "b", 1), ("user-2", "e", 2),
-    ]
-
-
 def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
     """One query + one checkpoint feeding both sinks (foreachBatch dual
     write): processed and error records land in their own sinks with the
