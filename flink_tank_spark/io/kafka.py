@@ -130,10 +130,17 @@ def write_dual_stream(
 ):
     """ONE streaming query feeding TWO sinks via foreachBatch — the
     direct analogue of the reference's single Flink job writing both the
-    output and error topics (EventProcessorJob.kt:65-74): the source is
-    read ONCE per micro-batch and both writes commit under the same
-    checkpoint, instead of two queries each re-reading Kafka with
-    independent progress.
+    output and error topics (EventProcessorJob.kt:65-74): the source's
+    offsets are planned ONCE per micro-batch and both writes commit
+    under the same checkpoint, instead of two queries each reading
+    Kafka with independent progress.
+
+    The source is still SCANNED more than once per micro-batch when the
+    topology branches: Job 1's union of the valid and error branches
+    (streaming/jobs.get_tagged_output_stream) scans it once per branch,
+    so its progress reports ``numInputRows`` = 3,000 for a 1,500-event
+    backlog. Both scans read the same planned offsets, so the output is
+    unaffected; only the read cost doubles.
 
     ``split_fn(batch_df) -> (df_a, df_b)``; ``sink_a``/``sink_b`` are
     ``fn(df, batch_id)`` batch writers. The batch is persisted so the

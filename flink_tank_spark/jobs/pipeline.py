@@ -25,10 +25,12 @@ so a replayed (uncommitted) batch rewrites the same file instead of
 minting a new one. Structured Streaming's file source tracks inputs by
 name, which upgrades the file hop to effectively exactly-once and makes
 the chain test's parity assertion strict instead of duplicate-tolerant.
-The sink coalesces each micro-batch to one file — matching the
+The sink lands each micro-batch as one file by default — matching the
 reference's operating point (≤10 msg/s out) and keeping the name set
-deterministic; a high-throughput deployment would use the Kafka hop,
-not this shim.
+deterministic — behind a hash shuffle, so the micro-batch itself is
+still computed at full parallelism and only the text write is
+single-task; a high-throughput deployment would use the Kafka hop, not
+this shim.
 
 Cadence defaults mirror the reference: 60 s checkpoint intervals
 (EventProcessorJob.kt:161), 10 min window / 5 s emit (AggregationJob.kt:
@@ -65,13 +67,17 @@ def idempotent_wire_sink(dirpath: str, fanout: int = 1):
     deterministically-named text files — ``batch-<id>.txt`` at the
     default ``fanout=1``, else ``batch-<id>-<part>.txt`` × ``fanout``.
 
-    ``fanout`` exists because a one-file batch serializes the whole
-    micro-batch write through a single task (profiled: the chained
-    two-job bench spent most of Job-1 in that one writer task). With
-    ``fanout > 1`` the batch is HASH-partitioned on the payload value —
-    a pure function of content, so a replayed batch reproduces the
-    identical file set (round-robin repartition would not) — and each
-    non-empty part lands under a name derived from its partition index.
+    Every batch, ``fanout=1`` included, is HASH-partitioned on the
+    payload value into ``fanout`` parts. The shuffle is a stage
+    boundary: the stage that computes the micro-batch (in Job 1 the
+    scan, parse, stateful sequence and enrich) always runs one task per
+    input partition, and ``fanout`` only sets how many tasks write the
+    text. Coalescing to one partition instead would be a narrow
+    dependency, folding that whole upstream stage into the one writer
+    task. Hash partitioning is a pure function of content, so a replayed
+    batch reproduces the identical file set (round-robin repartition
+    would not), and each non-empty part lands under a name derived from
+    its partition index.
 
     Replay safety (the foreachBatch idempotency contract from the Spark
     docs, keyed on ``batch_id``): the batch is written distributed to a
@@ -110,9 +116,7 @@ def idempotent_wire_sink(dirpath: str, fanout: int = 1):
 
     def write(df: DataFrame, batch_id: int) -> None:
         scratch = os.path.join(dirpath, f"_scratch-{uuid.uuid4().hex}")
-        shaped = (
-            df.repartition(fanout, F.col("value")) if fanout > 1 else df.coalesce(1)
-        )
+        shaped = df.repartition(fanout, F.col("value"))
         shaped.write.mode("overwrite").text(scratch)
         if not os.path.isdir(scratch):
             raise RuntimeError(
@@ -158,8 +162,9 @@ def start_processor_job(
 ):
     """Job 1 over the file wire: one checkpointed dual-sink query.
 
-    ``wire_fanout`` > 1 parallelizes the processed-side wire write (see
-    idempotent_wire_sink) — the chain-throughput knob; errors stay
+    The micro-batch is computed at full parallelism whatever the
+    fanout; ``wire_fanout`` > 1 only splits the processed-side text
+    write into that many files (see idempotent_wire_sink). Errors stay
     single-file (the reference's error topic is low-volume by design).
     """
     raw = read_jsonl_stream(spark, source_dir, max_files_per_trigger)
@@ -279,7 +284,14 @@ def main(argv: list[str] | None = None) -> None:
         help="Job 2 uses watermarked event-time windows (append mode) "
         "instead of the processing-time heartbeat",
     )
-    ap.add_argument("--wire-fanout", type=int, default=1)
+    ap.add_argument(
+        "--wire-fanout",
+        type=int,
+        default=1,
+        help="files per Job-1 micro-batch on the processed wire; the "
+        "batch is computed at full parallelism either way, this only "
+        "splits the text write",
+    )
     args = ap.parse_args(argv)
 
     spark = get_spark("pipeline")

@@ -283,6 +283,49 @@ def test_wire_sink_fanout_deterministic_names(spark, tmp_path):
     assert all_rows == sorted(r[0] for r in rows)
 
 
+def test_wire_sink_keeps_upstream_parallelism(spark, tmp_path):
+    """A one-file batch must not run its upstream in one task: the sink
+    shapes the batch behind a shuffle, so the stage that computes the
+    micro-batch (Job 1's stateful sequence, in the chain) keeps every
+    input partition as a task and only the write itself is single-task.
+    A ``coalesce(1)`` would fold that whole stage into one task."""
+    from flink_tank_spark.jobs.pipeline import idempotent_wire_sink
+
+    out = str(tmp_path / "wire")
+    sink = idempotent_wire_sink(out)
+    n = 3_000
+    df = spark.range(0, n, 1, numPartitions=3).select(
+        F.col("id").cast("string").alias("value")
+    )
+    sc = spark.sparkContext
+    group = f"wire-sink-parallelism-{tmp_path.name}"
+    sc.setJobGroup(group, "idempotent_wire_sink parallelism")
+    try:
+        sink(df, 11)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    # the status store fills from the listener bus, a little after the
+    # write returns: wait until every job of the group has finished
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if jobs and all(j and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.time() < deadline, jobs
+        time.sleep(0.1)
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    tasks = [s.numTasks for s in stages if s is not None]
+    assert max(tasks) >= 3, tasks
+
+    files = sorted(f for f in os.listdir(out) if not f.startswith(("_", ".")))
+    assert files == ["batch-00000011.txt"]
+    with open(os.path.join(out, files[0])) as f:
+        assert sorted(f.read().split()) == sorted(str(i) for i in range(n))
+
+
 def test_chain_with_fanout_matches_batch(spark, tmp_path):
     """The chained pipeline with wire_fanout > 1 and multi-batch
     pipelining (maxFilesPerTrigger) still ends metrics-equal to the
