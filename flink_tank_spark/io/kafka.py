@@ -1,4 +1,4 @@
-"""Kafka source/sink helpers (S1/S2, K1/K2) + generic streaming wiring.
+"""Kafka source/sink helpers (S1/S2, K1/K2) + the file stand-in source.
 
 Reference wiring: KafkaSource with earliest offsets and value-only string
 deserialization (``EventProcessorJob.kt:57-63``, ``AggregationJob.kt:
@@ -6,6 +6,9 @@ deserialization (``EventProcessorJob.kt:57-63``, ``AggregationJob.kt:
 (``EventProcessorJob.kt:65-74``, ``AggregationJob.kt:233-241``);
 checkpointing every 60 s ⇒ at-least-once (SURVEY §2.2) — Structured
 Streaming's Kafka sink + checkpointLocation gives the same guarantee.
+Job 1 writes both of its topics from one query through
+:func:`kafka_batch_sink` (streaming/jobs.start_processor_query); Job 2
+writes its one topic through :func:`write_kafka_stream`.
 
 The Kafka connector jar (spark-sql-kafka) may be absent in offline test
 environments; ``kafka_available`` gates it, and the jobs accept any
@@ -95,14 +98,9 @@ def write_kafka_stream(
     checkpoint_dir: str,
     query_name: str,
     trigger_interval: str | None = None,
-    available_now: bool = False,
 ):
-    """K1/K2: JSON string per record to one topic, checkpointed.
-
-    ``available_now`` drains everything currently in the source then
-    stops — the batch-ish mode integration tests use against a real
-    broker.
-    """
+    """K2: JSON string per record to one topic, checkpointed — Job 2's
+    metrics sink."""
     writer = (
         json_df.select(F.col("value").cast("binary").alias("value"))
         .writeStream.format("kafka")
@@ -111,76 +109,25 @@ def write_kafka_stream(
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
+    if trigger_interval:
         writer = writer.trigger(processingTime=trigger_interval)
     return writer.start()
 
 
-def write_dual_stream(
-    source_df: DataFrame,
-    split_fn,
-    sink_a,
-    sink_b,
-    checkpoint_dir: str,
-    query_name: str,
-    available_now: bool = False,
-    trigger_interval: str | None = None,
-):
-    """ONE streaming query feeding TWO sinks via foreachBatch — the
-    direct analogue of the reference's single Flink job writing both the
-    output and error topics (EventProcessorJob.kt:65-74): the source's
-    offsets are planned ONCE per micro-batch and both writes commit
-    under the same checkpoint, instead of two queries each reading
-    Kafka with independent progress.
+def kafka_batch_sink(brokers: str, topic: str):
+    """K1: foreachBatch writer landing a micro-batch's ``value`` strings
+    on one topic — Job 1's processed and error sinks inside its one
+    query (the Kafka counterpart of jobs/pipeline.idempotent_wire_sink).
+    A replayed batch re-sends its records: at-least-once, like the
+    reference."""
 
-    The source is still SCANNED more than once per micro-batch when the
-    topology branches: Job 1's union of the valid and error branches
-    (streaming/jobs.get_tagged_output_stream) scans it once per branch,
-    so its progress reports ``numInputRows`` = 3,000 for a 1,500-event
-    backlog. Both scans read the same planned offsets, so the output is
-    unaffected; only the read cost doubles.
+    def write(df: DataFrame, batch_id: int) -> None:
+        (
+            df.select(F.col("value").cast("binary").alias("value"))
+            .write.format("kafka")
+            .option("kafka.bootstrap.servers", brokers)
+            .option("topic", topic)
+            .save()
+        )
 
-    ``split_fn(batch_df) -> (df_a, df_b)``; ``sink_a``/``sink_b`` are
-    ``fn(df, batch_id)`` batch writers. The batch is persisted so the
-    two sinks don't recompute the (shared) topology.
-    """
-
-    def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            df_a, df_b = split_fn(batch_df)
-            sink_a(df_a, batch_id)
-            sink_b(df_b, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        source_df.writeStream.foreachBatch(write_both)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
-
-
-def write_jsonl_stream(
-    json_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    query_name: str,
-    available_now: bool = False,
-):
-    writer = (
-        json_df.writeStream.format("text")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return write

@@ -1,33 +1,20 @@
 """Job 2 entrypoint: Kafka → sliding-window metrics → Kafka.
 
 Mirrors the reference's aggregation job (``AggregationJob.kt:208-275``:
-args at :212-216, topology at :244-271). Two modes:
-
-- ``--mode heartbeat`` (default): exact reference parity — always-emit
-  5-s cadence with zero-count records (streaming/heartbeat.py).
-- ``--mode declarative``: idiomatic Spark sliding window (the form the
-  reference's own docs recommend, AggregationJob.kt:30-46) — aligned
-  bucket bounds, emits only on data.
+args at :212-216, topology at :244-271) with exact reference parity: the
+always-emit 5-s cadence with zero-count records (streaming/heartbeat.py).
+The watermarked event-time alternative runs over the file wire
+(jobs/pipeline.start_aggregation_job ``event_time=True``).
 """
 
 from __future__ import annotations
 
 import argparse
 
-from pyspark.sql import functions as F
-
-from flink_tank_spark.io.kafka import (
-    DEFAULT_CHECKPOINT_INTERVAL,
-    read_kafka_stream,
-    write_kafka_stream,
-)
+from flink_tank_spark.io.kafka import read_kafka_stream, write_kafka_stream
 from flink_tank_spark.session import get_spark
 from flink_tank_spark.streaming.heartbeat import sliding_metrics_heartbeat
-from flink_tank_spark.streaming.jobs import (
-    get_aggregation_stream,
-    parse_processed_events,
-    serialize_metrics,
-)
+from flink_tank_spark.streaming.jobs import parse_processed_events, serialize_metrics
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -36,29 +23,16 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--input-topic", default="output-results")
     ap.add_argument("--output-topic", default="aggregated-metrics")
     ap.add_argument("--checkpoint-dir", required=True)
-    ap.add_argument("--mode", choices=["heartbeat", "declarative"], default="heartbeat")
     # Micro-batch cadence. In Spark each micro-batch commit checkpoints,
-    # so the trigger interval IS the checkpoint cadence. Declarative mode
-    # defaults to the reference's 60 s (AggregationJob.kt:221); heartbeat
-    # mode must micro-batch fast enough to fire its 5 s processing-time
+    # so the trigger interval IS the checkpoint cadence. The heartbeat
+    # must micro-batch fast enough to fire its 5 s processing-time
     # timers, so it defaults to no fixed trigger (back-to-back batches).
     ap.add_argument("--trigger-interval", default=None)
     args = ap.parse_args(argv)
-    trigger = args.trigger_interval
-    if trigger is None and args.mode == "declarative":
-        trigger = DEFAULT_CHECKPOINT_INTERVAL
 
     spark = get_spark("aggregation")
     raw = read_kafka_stream(spark, args.brokers, args.input_topic)
-    processed = parse_processed_events(raw)
-
-    if args.mode == "heartbeat":
-        metrics = sliding_metrics_heartbeat(processed)
-    else:
-        metrics = get_aggregation_stream(
-            processed.withColumn("eventTime", F.current_timestamp()),
-            streaming=True,
-        )
+    metrics = sliding_metrics_heartbeat(parse_processed_events(raw))
 
     q = write_kafka_stream(
         serialize_metrics(metrics),
@@ -66,7 +40,7 @@ def main(argv: list[str] | None = None) -> None:
         args.output_topic,
         f"{args.checkpoint_dir}/metrics",
         "aggregation-metrics",
-        trigger_interval=trigger,
+        trigger_interval=args.trigger_interval,
     )
     q.awaitTermination()
 

@@ -2,10 +2,12 @@
 
 Mirrors the reference job's config surface (``EventProcessorJob.kt:48-53``
 ParameterTool args; K8s wiring ``k8s/flink/event-processor-job.yaml:27-38``)
-on Structured Streaming: two queries off one source — the stateful
-sequence requires running inside the streaming query, and Kafka re-reads
-are the idiomatic Spark replacement for Flink side outputs (SURVEY §2.5).
-Checkpointing gives the same at-least-once contract (SURVEY §2.2).
+on Structured Streaming: ONE query with one checkpoint writes both
+topics (streaming/jobs.start_processor_query with two
+io/kafka.kafka_batch_sink writers), as the reference's one job does
+(EventProcessorJob.kt:65-74, wired at :173-174). A replayed micro-batch
+re-sends its records, so delivery is at-least-once like the reference
+(SURVEY §2.2).
 
 Usage:
     spark-submit -m event_processor \\
@@ -20,15 +22,11 @@ import argparse
 
 from flink_tank_spark.io.kafka import (
     DEFAULT_CHECKPOINT_INTERVAL,
+    kafka_batch_sink,
     read_kafka_stream,
-    write_kafka_stream,
 )
 from flink_tank_spark.session import get_spark
-from flink_tank_spark.streaming.jobs import (
-    get_output_streams,
-    serialize_errors,
-    serialize_processed,
-)
+from flink_tank_spark.streaming.jobs import start_processor_query
 
 
 def main(argv: list[str] | None = None) -> None:
@@ -42,61 +40,20 @@ def main(argv: list[str] | None = None) -> None:
     # (EventProcessorJob.kt:161); each micro-batch commit checkpoints,
     # so the trigger interval IS the at-least-once commit cadence.
     ap.add_argument("--trigger-interval", default=DEFAULT_CHECKPOINT_INTERVAL)
-    # one query + one checkpoint feeding both topics (reference shape:
-    # a single job owns both sinks) instead of two independent queries
-    ap.add_argument("--dual-sink", action="store_true")
     args = ap.parse_args(argv)
 
     spark = get_spark("event-processor")
-    raw = read_kafka_stream(spark, args.brokers, args.input_topic)
-
-    if args.dual_sink:
-        from flink_tank_spark.io.kafka import write_dual_stream
-        from flink_tank_spark.streaming.jobs import get_tagged_output_stream, split_tagged
-
-        def kafka_batch_sink(topic: str):
-            def write(df, batch_id):
-                (
-                    df.selectExpr("CAST(value AS BINARY) AS value")
-                    .write.format("kafka")
-                    .option("kafka.bootstrap.servers", args.brokers)
-                    .option("topic", topic)
-                    .save()
-                )
-            return write
-
-        q = write_dual_stream(
-            get_tagged_output_stream(raw, streaming=True),
-            split_tagged,
-            kafka_batch_sink(args.output_topic),
-            kafka_batch_sink(args.error_topic),
-            f"{args.checkpoint_dir}/dual",
-            "event-processor-dual",
-            trigger_interval=args.trigger_interval,
-        )
-        q.awaitTermination()
-        return
-
-    processed, errors = get_output_streams(raw, streaming=True)
-
-    q1 = write_kafka_stream(
-        serialize_processed(processed),
-        args.brokers,
-        args.output_topic,
-        f"{args.checkpoint_dir}/processed",
-        "event-processor-main",
+    q = start_processor_query(
+        read_kafka_stream(spark, args.brokers, args.input_topic),
+        kafka_batch_sink(args.brokers, args.output_topic),
+        kafka_batch_sink(args.brokers, args.error_topic),
+        # the subdirectory the one-query shape has always used, so its
+        # existing checkpoints resume
+        f"{args.checkpoint_dir}/dual",
+        "event-processor",
         trigger_interval=args.trigger_interval,
     )
-    q2 = write_kafka_stream(
-        serialize_errors(errors),
-        args.brokers,
-        args.error_topic,
-        f"{args.checkpoint_dir}/errors",
-        "event-processor-errors",
-        trigger_interval=args.trigger_interval,
-    )
-    spark.streams.awaitAnyTermination()
-    q1.stop(), q2.stop()
+    q.awaitTermination()
 
 
 if __name__ == "__main__":

@@ -11,7 +11,8 @@ checkpointed Structured Streaming queries:
 - **Job 1** (:func:`start_processor_job`): wire source → parse/route →
   stateful per-key sequence → enrich → serialize, ONE query feeding the
   processed and error sinks through a shared checkpoint
-  (io/kafka.write_dual_stream — the K1/K2 dual-topic parity).
+  (streaming/jobs.start_processor_query — the query jobs/event_processor.py
+  runs with Kafka sinks).
 - **Job 2** (:func:`start_aggregation_job`): Job-1's processed output →
   lenient parse (failures silently dropped — the reference's error-path
   asymmetry, AggregationJob.kt:246-256) → timer-based sliding-window
@@ -44,21 +45,16 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flink_tank_spark.io.kafka import (
-    DEFAULT_CHECKPOINT_INTERVAL,
-    read_jsonl_stream,
-    write_dual_stream,
-)
+from flink_tank_spark.io.kafka import DEFAULT_CHECKPOINT_INTERVAL, read_jsonl_stream
 from flink_tank_spark.streaming.heartbeat import (
     EMIT_EVERY_MS,
     WINDOW_MS,
     sliding_metrics_heartbeat,
 )
 from flink_tank_spark.streaming.jobs import (
-    get_tagged_output_stream,
     parse_processed_events,
     serialize_metrics,
-    split_tagged,
+    start_processor_query,
 )
 
 
@@ -167,17 +163,14 @@ def start_processor_job(
     write into that many files (see idempotent_wire_sink). Errors stay
     single-file (the reference's error topic is low-volume by design).
     """
-    raw = read_jsonl_stream(spark, source_dir, max_files_per_trigger)
-    tagged = get_tagged_output_stream(raw, streaming=True)
-    return write_dual_stream(
-        tagged,
-        split_tagged,
+    return start_processor_query(
+        read_jsonl_stream(spark, source_dir, max_files_per_trigger),
         idempotent_wire_sink(processed_dir, fanout=wire_fanout),
         idempotent_wire_sink(errors_dir),
         checkpoint_dir,
         "processor-job",
+        trigger_interval=trigger_interval,
         available_now=available_now,
-        trigger_interval=None if available_now else trigger_interval,
     )
 
 
@@ -265,9 +258,11 @@ def main(argv: list[str] | None = None) -> None:
     """Run the whole chain (both jobs, one driver) over the file wire.
 
     The reference deploys the two jobs separately (two Flink clusters);
-    with a broker, use jobs/event_processor.py + jobs/aggregation.py the
-    same way. This entrypoint is the broker-less single-driver form —
-    the same two checkpointed queries the chain test kills/restarts.
+    with a broker, deploy jobs/event_processor.py (the same Job-1 query
+    with Kafka sinks) and jobs/aggregation.py (the same heartbeat
+    aggregator) the same way. This entrypoint is the broker-less
+    single-driver form — the two checkpointed queries the chain test
+    kills/restarts.
     """
     import argparse
 

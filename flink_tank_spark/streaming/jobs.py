@@ -8,12 +8,14 @@ batch pytest golden tests and in the streaming mains.
 
 Job 1 (Event Processor, EventProcessorJob.kt:156-177):
     raw strings → parse/route → per-key sequence + enrich
-    → (processed JSON, error JSON)
+    → (processed JSON, error JSON), run as one streaming query by
+    :func:`start_processor_query` whatever the transport
 
 Job 2 (Aggregation, AggregationJob.kt:208-275):
     processed JSON → parse (failures silently dropped — the reference's
     error-path asymmetry, AggregationJob.kt:246-256; do NOT route) →
-    sliding window metrics → JSON
+    sliding window metrics (streaming/heartbeat.py, or
+    operators/aggregate.py's watermarked form) → JSON
 """
 
 from __future__ import annotations
@@ -21,10 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_tank_spark.operators.aggregate import (
-    sliding_metrics,
-    sliding_metrics_single_agg,
-)
 from flink_tank_spark.operators.enrich import enrich
 from flink_tank_spark.operators.parse import parse_and_route
 from flink_tank_spark.schemas import PROCESSED_EVENT_SCHEMA
@@ -77,32 +75,64 @@ def serialize_processed(processed: DataFrame) -> DataFrame:
     )
 
 
-def get_tagged_output_stream(raw_df: DataFrame, streaming: bool = True) -> DataFrame:
-    """Both Job-1 outputs as ONE tagged stream (columns: value, tag) for
-    the foreachBatch dual-sink path (io/kafka.write_dual_stream): the
-    stateful sequence stays inside the streaming query (state must
-    persist across micro-batches), the union carries processed ('ok')
-    and error ('err') records together, and a single checkpoint commits
-    both sinks' progress atomically — the closest Spark analogue of the
-    reference's one job writing two topics (EventProcessorJob.kt:65-74).
-    """
-    processed, errors = get_output_streams(raw_df, streaming=streaming)
-    return serialize_processed(processed).withColumn("tag", F.lit("ok")).unionByName(
-        serialize_errors(errors).withColumn("tag", F.lit("err"))
-    )
-
-
-def split_tagged(batch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """foreachBatch splitter for get_tagged_output_stream batches."""
-    ok = batch_df.filter(F.col("tag") == "ok").select("value")
-    err = batch_df.filter(F.col("tag") == "err").select("value")
-    return ok, err
-
-
 def serialize_errors(errors: DataFrame) -> DataFrame:
     return errors.select(
         F.to_json(F.struct("rawMessage", "errorType", "errorMessage", "timestamp")).alias("value")
     )
+
+
+def start_processor_query(
+    raw: DataFrame,
+    processed_sink,
+    errors_sink,
+    checkpoint_dir: str,
+    query_name: str,
+    trigger_interval: str | None = None,
+    available_now: bool = False,
+):
+    """Job 1 as ONE checkpointed streaming query feeding both sinks —
+    the analogue of the reference's single job writing the output and
+    error topics (EventProcessorJob.kt:65-74). Every transport runs this
+    shape; only the sinks differ (io/kafka.kafka_batch_sink,
+    jobs/pipeline.idempotent_wire_sink, any ``fn(df, batch_id)``
+    writer of a ``value`` column).
+
+    Both outputs travel as one tagged union (columns: value, tag), so
+    the stateful sequence stays inside the streaming query (its state
+    persists across micro-batches), the source's offsets are planned
+    ONCE per micro-batch, and both writes commit under one checkpoint.
+    The union's valid and error branches still SCAN the source once
+    each, so progress reports ``numInputRows`` = 3,000 for a 1,500-event
+    backlog; both scans read the same planned offsets, so only the read
+    cost doubles. Each batch is persisted so the two sinks don't
+    recompute the shared topology.
+
+    ``available_now`` drains the source then stops; otherwise
+    ``trigger_interval`` sets the micro-batch (= checkpoint) cadence.
+    """
+    processed, errors = get_output_streams(raw, streaming=True)
+    tagged = serialize_processed(processed).withColumn("tag", F.lit("ok")).unionByName(
+        serialize_errors(errors).withColumn("tag", F.lit("err"))
+    )
+
+    def write_both(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            processed_sink(batch_df.filter(F.col("tag") == "ok").select("value"), batch_id)
+            errors_sink(batch_df.filter(F.col("tag") == "err").select("value"), batch_id)
+        finally:
+            batch_df.unpersist()
+
+    writer = (
+        tagged.writeStream.foreachBatch(write_both)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(query_name)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
 
 
 def serialize_metrics(metrics: DataFrame) -> DataFrame:
@@ -144,24 +174,4 @@ def parse_processed_events(raw_df: DataFrame, value_col: str = "value") -> DataF
         )
         .select("p.*")
         .drop(CORRUPT_COL)
-    )
-
-
-def get_aggregation_stream(
-    processed_df: DataFrame,
-    ts_col: str = "eventTime",
-    streaming: bool = False,
-    window_size: str = "10 minutes",
-    slide: str = "5 seconds",
-) -> DataFrame:
-    """Job 2 topology: ProcessedEvents (+ an event-time column) →
-    AggregatedMetrics. Streaming uses the single-aggregation variant."""
-    fn = sliding_metrics_single_agg if streaming else sliding_metrics
-    return fn(
-        processed_df,
-        key_col="originalId",
-        type_col="eventType",
-        ts_col=ts_col,
-        window_size=window_size,
-        slide=slide,
     )

@@ -85,11 +85,8 @@ def main() -> int:
         # sinks (the reference's EventProcessorJob shape). Slower than
         # raw ingest by design: every event crosses the Python stateful
         # operator.
-        from flink_tank_spark.io.kafka import read_jsonl_stream, write_dual_stream
-        from flink_tank_spark.streaming.jobs import (
-            get_tagged_output_stream,
-            split_tagged,
-        )
+        from flink_tank_spark.io.kafka import read_jsonl_stream
+        from flink_tank_spark.streaming.jobs import start_processor_query
 
         ok_dir, err_dir, chk2 = (
             os.path.join(work, d) for d in ("ok", "err", "chk2")
@@ -102,9 +99,8 @@ def main() -> int:
             return write
 
         t0 = time.perf_counter()
-        q = write_dual_stream(
-            get_tagged_output_stream(read_jsonl_stream(spark, src), streaming=True),
-            split_tagged,
+        q = start_processor_query(
+            read_jsonl_stream(spark, src),
             parquet_sink(ok_dir),
             parquet_sink(err_dir),
             chk2,

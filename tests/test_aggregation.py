@@ -14,7 +14,10 @@ import json
 
 from pyspark.sql import functions as F
 
-from flink_tank_spark.streaming.jobs import get_aggregation_stream
+from flink_tank_spark.operators.aggregate import (
+    sliding_metrics,
+    sliding_metrics_single_agg,
+)
 
 BASE = dt.datetime(2024, 6, 1, 12, 0, 0)
 
@@ -38,7 +41,7 @@ def test_sliding_counts_per_key_and_type(spark):
             ("user-2", "view", 1),
         ],
     )
-    out = get_aggregation_stream(df, window_size="10 minutes", slide="5 seconds")
+    out = sliding_metrics(df, window_size="10 minutes", slide="5 seconds")
     rows = out.collect()
     # every event lands in 120 sliding windows (600s / 5s)
     by_user = {}
@@ -62,10 +65,8 @@ def test_single_agg_variant_matches_two_level(spark):
         ("u2", "b", 1), ("u2", "b", 600),  # second event outside u2's first windows
     ]
     df = _processed_df(spark, rows)
-    a = get_aggregation_stream(df, window_size="1 minute", slide="30 seconds")
-    b = get_aggregation_stream(
-        df, window_size="1 minute", slide="30 seconds", streaming=True
-    )
+    a = sliding_metrics(df, window_size="1 minute", slide="30 seconds")
+    b = sliding_metrics_single_agg(df, window_size="1 minute", slide="30 seconds")
     ka = {(r.userId, r.windowStart): (r.totalEventCount, r.eventTypeCounts) for r in a.collect()}
     kb = {(r.userId, r.windowStart): (r.totalEventCount, r.eventTypeCounts) for r in b.collect()}
     assert ka == kb
@@ -74,7 +75,7 @@ def test_single_agg_variant_matches_two_level(spark):
 def test_events_outside_window_pruned(spark):
     # Two events 11 minutes apart never share a 10-minute window
     df = _processed_df(spark, [("u1", "a", 0), ("u1", "b", 660)])
-    out = get_aggregation_stream(df, window_size="10 minutes", slide="5 seconds")
+    out = sliding_metrics(df, window_size="10 minutes", slide="5 seconds")
     assert max(r.totalEventCount for r in out.collect()) == 1
 
 

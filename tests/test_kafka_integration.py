@@ -21,13 +21,9 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from flink_tank_spark.io.kafka import kafka_available, read_kafka_stream, write_kafka_stream
+from flink_tank_spark.io.kafka import kafka_available, kafka_batch_sink, read_kafka_stream
 from flink_tank_spark.producer import generate_messages
-from flink_tank_spark.streaming.jobs import (
-    get_output_streams,
-    serialize_errors,
-    serialize_processed,
-)
+from flink_tank_spark.streaming.jobs import start_processor_query
 
 BOOTSTRAP = os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP")
 
@@ -56,18 +52,17 @@ def test_job1_kafka_to_kafka_end_to_end(spark, tmp_path):
         .save()
     )
 
-    raw = read_kafka_stream(spark, BOOTSTRAP, in_topic)
-    processed, errors = get_output_streams(raw, streaming=True)
-    q1 = write_kafka_stream(
-        serialize_processed(processed), BOOTSTRAP, out_topic,
-        str(tmp_path / "chk-processed"), f"e2e-processed-{run}", available_now=True,
+    # the deployed shape (jobs/event_processor.py): one query, one
+    # checkpoint, both topics written per micro-batch
+    q = start_processor_query(
+        read_kafka_stream(spark, BOOTSTRAP, in_topic),
+        kafka_batch_sink(BOOTSTRAP, out_topic),
+        kafka_batch_sink(BOOTSTRAP, err_topic),
+        str(tmp_path / "chk"),
+        f"e2e-processor-{run}",
+        available_now=True,
     )
-    q2 = write_kafka_stream(
-        serialize_errors(errors), BOOTSTRAP, err_topic,
-        str(tmp_path / "chk-errors"), f"e2e-errors-{run}", available_now=True,
-    )
-    q1.awaitTermination(120)
-    q2.awaitTermination(120)
+    q.awaitTermination(120)
 
     def read_topic(topic):
         return [

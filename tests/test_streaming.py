@@ -214,8 +214,7 @@ def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
     """One query + one checkpoint feeding both sinks (foreachBatch dual
     write): processed and error records land in their own sinks with the
     stateful sequence intact across micro-batches."""
-    from flink_tank_spark.io.kafka import write_dual_stream
-    from flink_tank_spark.streaming.jobs import get_tagged_output_stream, split_tagged
+    from flink_tank_spark.streaming.jobs import start_processor_query
 
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
@@ -233,10 +232,8 @@ def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
 
     def run_available(msgs, name):
         _write_batch(src, name, msgs)
-        raw = read_jsonl_stream(spark, src)
-        q = write_dual_stream(
-            get_tagged_output_stream(raw, streaming=True),
-            split_tagged,
+        q = start_processor_query(
+            read_jsonl_stream(spark, src),
             text_sink(ok_dir),
             text_sink(err_dir),
             ckpt,
