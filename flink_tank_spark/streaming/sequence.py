@@ -7,14 +7,55 @@ element in arrival order (``EventProcessorJob.kt:99-128``, keyed by
 
 A running per-key counter is not expressible declaratively under
 streaming (SURVEY §2.6), so this is the one place the engine drops to a
-stateful Pandas operator: ``applyInPandasWithState`` with a single-int
-``GroupState`` per key — the direct Spark analogue of Flink's
-``ValueState<Int>``. Data crosses to Python Arrow-batched, one call per
-(key, micro-batch), not per row.
+stateful Pandas operator: ``applyInPandasWithState``. It groups by a
+fixed hash bucket of the key, ``pmod(xxhash64(id), N_BUCKETS)``, not by
+the key, so data crosses to Python once per (bucket, micro-batch) —
+at most ``N_BUCKETS`` calls a batch however many keys it holds — and
+each call sequences all of its bucket's rows in one pass. State is per
+bucket: the ``ids`` in the bucket and their ``latest`` sequence, as two
+parallel arrays — the keys' ``ValueState<Int>`` values, stored together.
 
-Scale: state is one int per key, partitioned by the grouping key across
-executors — the same sharding Flink's keyBy gives. Key cardinality
-bounds state size exactly as in the reference (50 users → 50 ints).
+Scale: the state holds one int per key, as in the reference (50 users →
+50 ints), in at most ``N_BUCKETS`` state rows, partitioned by bucket
+across executors. Python's per-group overhead (Arrow slicing, pandas
+construction, the ``GroupState`` round trip) is paid per bucket, not per
+key. That pays while a batch holds many more distinct keys than
+``N_BUCKETS``; the buckets cost three things:
+
+- Writes. A bucket touched by a batch rewrites every key it holds, so a
+  batch writes about keys ÷ ``N_BUCKETS`` entries per touched bucket,
+  not one per touched key, and its cost grows with every key ever
+  stored, not with the keys in the batch. Over a populated 50,000-key
+  pool (``scripts/bench_sequence_state.py``) a batch added about 0.5 MB
+  to the checkpoint, against 19 KB (150 events) to 38 KB (1,500 events)
+  with per-key state. A 1,500-event batch was still 39 % faster; a
+  150-event batch tied. At 500,000 stored keys a batch wrote about
+  4.5 MB, and a 150-event batch took 2.2–3.8 s of add-batch, where
+  per-key state took about 1.9 s at 50,000 keys.
+- Parallelism. The stateful stage has at most ``N_BUCKETS`` non-empty
+  tasks, whatever ``spark.sql.shuffle.partitions`` is. Job 1's manifest
+  runs 6 (``k8s/spark/event-processor-job.yaml``). Spark pins the state
+  partition count in the checkpoint anyway, so more stateful tasks than
+  ``N_BUCKETS`` need a larger constant and a fresh checkpoint.
+- Memory. A call holds its bucket's share of the micro-batch at once,
+  about batch ÷ ``N_BUCKETS`` rows plus a sorted copy, where a per-key
+  call took one Arrow chunk at a time. The largest batch is the first
+  on a fresh checkpoint: the Kafka source starts at ``earliest`` with
+  no ``maxOffsetsPerTrigger`` (io/kafka.py), so it reads the whole
+  retained topic, about 1.2 M events at the reference's 2 events/s and
+  7-day retention. Such a batch over the reference's 50 keys took
+  31.8 and 45.7 s of add-batch against 26.5 and 33.5 s with per-key
+  calls (two runs each, 3 cores), and peak Python worker memory rose
+  from 129 to 165 MB: with 50 keys there are no calls to save, and a
+  call takes in its whole bucket before it returns a row.
+
+``N_BUCKETS`` and the hash are part of the checkpoint format, because
+the bucket id is the state key. A checkpoint with per-key state (key
+schema ``id string``) fails at start with
+``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``. Another bucket count or hash
+would keep the key schema and silently move keys to buckets that do not
+hold their history, restarting their sequences. Hence a module
+constant, never a setting.
 """
 
 from __future__ import annotations
@@ -23,16 +64,25 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-# state: (latest_sequence,)
-_STATE_SCHEMA = StructType([StructField("latest_sequence", LongType())])
+N_BUCKETS = 64
+
+# state per bucket: the bucket's keys and each key's latest sequence
+_STATE_SCHEMA = StructType(
+    [
+        StructField("ids", ArrayType(StringType())),
+        StructField("latest", ArrayType(LongType())),
+    ]
+)
 
 SEQUENCED_SCHEMA = StructType(
     [
@@ -51,19 +101,28 @@ def _assign_sequences(
     pdf_iter: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    latest = state.get[0] if state.exists else 0
-    for pdf in pdf_iter:
-        if pdf.empty:
-            continue
-        # Within a micro-batch, arrival order is pinned by the explicit
-        # `arrival` column (Kafka offset / file line number) — the same
-        # per-partition FIFO order Flink relies on for per-key sequencing.
-        pdf = pdf.sort_values("arrival", kind="stable")
-        n = len(pdf)
-        pdf = pdf.assign(sequence=range(latest + 1, latest + n + 1))
-        latest += n
-        yield pdf
-    state.update((latest,))
+    # The group's rows may arrive as several Arrow chunks
+    # (spark.sql.execution.arrow.maxRecordsPerBatch); arrival order holds
+    # across them only if they are sorted together.
+    pdf = pd.concat(list(pdf_iter), ignore_index=True)
+    if pdf.empty:
+        return
+    # Within a micro-batch, arrival order is pinned by the explicit
+    # `arrival` column (Kafka offset / file line number) — the same
+    # per-partition FIFO order Flink relies on for per-key sequencing.
+    pdf = pdf.sort_values("arrival", kind="stable", ignore_index=True)
+    ids, latest = state.get if state.exists else ([], [])
+    stored = dict(zip(ids, latest))
+    # One pass in arrival order both numbers the rows and leaves each
+    # key at its latest sequence. A plain loop: pandas' map + groupby
+    # cost about 2 ms a call before the first row, this about 0.5 ms.
+    sequence = []
+    for k in pdf["id"].tolist():
+        stored[k] = stored.get(k, 0) + 1
+        sequence.append(stored[k])
+    pdf["sequence"] = sequence
+    state.update((list(stored), list(stored.values())))
+    yield pdf[SEQUENCED_SCHEMA.fieldNames()]
 
 
 def with_sequence_stream(valid_df: DataFrame) -> DataFrame:
@@ -73,7 +132,8 @@ def with_sequence_stream(valid_df: DataFrame) -> DataFrame:
     equivalent monotone per-partition id) defining within-batch order.
     """
     return (
-        valid_df.groupBy("id")
+        valid_df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(N_BUCKETS)))
+        .groupBy("bucket")
         .applyInPandasWithState(
             _assign_sequences,
             outputStructType=SEQUENCED_SCHEMA,

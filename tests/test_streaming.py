@@ -11,11 +11,13 @@ from __future__ import annotations
 
 import json
 import os
+import random
 
 from pyspark.sql import functions as F
 
 from flink_tank_spark.io.kafka import read_jsonl_stream
 from flink_tank_spark.streaming.jobs import get_output_streams, serialize_processed
+from flink_tank_spark.streaming.sequence import N_BUCKETS
 
 
 _ARRIVAL = 0
@@ -83,6 +85,89 @@ def test_sequence_state_survives_micro_batches(spark, tmp_path):
     }
     # processingDelay invariant (reference asserts >= 0)
     assert all(r["processingDelay"] >= 0 for r in rows)
+
+
+def _drain_sequenced(spark, src: str, ckpt: str, out_dir: str):
+    """One availableNow run of the streaming sequence over ``src`` into
+    JSON lines under ``out_dir``; returns the finished query."""
+    processed, _ = get_output_streams(read_jsonl_stream(spark, src), streaming=True)
+    q = (
+        serialize_processed(processed)
+        .writeStream.format("text")
+        .option("path", out_dir)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    return q
+
+
+def _sequences(spark, out_dir: str) -> dict:
+    rows = (json.loads(r.value) for r in spark.read.text(out_dir).collect())
+    return {(r["originalId"], r["eventType"]): r["sequence"] for r in rows}
+
+
+def test_sequence_follows_arrival_across_arrow_chunks(spark, tmp_path):
+    """One key's rows can reach the sequence operator as several Arrow
+    chunks (spark.sql.execution.arrow.maxRecordsPerBatch); its sequences
+    must follow `arrival` across all of them, not within each chunk."""
+    src = tmp_path / "in"
+    src.mkdir()
+    for name, arrivals in (("even", range(0, 20, 2)), ("odd", range(1, 20, 2))):
+        (src / f"{name}.jsonl").write_text(
+            "".join(
+                f'{a}\t{{"id":"k","type":"t{a}","timestamp":{a},"data":{{}}}}\n'
+                for a in arrivals
+            )
+        )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        _drain_sequenced(spark, str(src), str(tmp_path / "ckpt"), str(tmp_path / "out"))
+    finally:
+        spark.conf.set(conf, prev)
+    assert _sequences(spark, str(tmp_path / "out")) == {
+        ("k", f"t{a}"): a + 1 for a in range(20)
+    }
+
+
+def test_sequence_buckets_share_state_across_restarts(spark, tmp_path):
+    """Hundreds of keys share the sequence's hash buckets: across three
+    query runs on one checkpoint, every key's sequences still equal the
+    batch topology's row_number over arrival, and the state holds one
+    row per bucket, not one per key."""
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out_dir = str(tmp_path / "out")
+    rng = random.Random(5)
+    keys = [f"user-{i}" for i in range(300)]
+    for run in range(3):
+        _write_batch(
+            src,
+            f"run{run}",
+            [
+                json.dumps({"id": rng.choice(keys), "type": f"t{run}-{i}", "timestamp": i, "data": {}})
+                for i in range(400)
+            ],
+        )
+        q = _drain_sequenced(spark, src, ckpt, out_dir)
+
+    batch_raw = (
+        spark.read.schema("arrival long, value string")
+        .options(sep="\t", quote="", escape="")
+        .csv(src)
+    )
+    batch_processed, _ = get_output_streams(batch_raw, order_by=["arrival"])
+    want = {
+        (r.originalId, r.eventType): r.sequence
+        for r in batch_processed.select("originalId", "eventType", "sequence").collect()
+    }
+    got = _sequences(spark, out_dir)
+    assert len(got) == 1200
+    assert got == want
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] <= N_BUCKETS
 
 
 def test_error_stream_end_to_end(spark, tmp_path):
