@@ -12,29 +12,67 @@ heartbeat", :193-204). Window bounds are wall-clock ``[now-10min, now]``
 Declarative ``window()`` cannot express always-emit-on-cadence
 (streaming aggs emit only on data/watermark advance — SURVEY §4.2), so
 this is the engine's second and last custom-state operator:
-``applyInPandasWithState`` with ``ProcessingTimeTimeout`` — per-key
-state + per-key processing-time timeouts, the direct analogues of the
-reference's ``ValueState<WindowState>`` + timer service. (The newer
+``applyInPandasWithState`` with ``ProcessingTimeTimeout``. (The newer
 ``transformWithStateInPandas`` API would fit even more directly, but
 its Python driver worker requires the protobuf package, unavailable
 here; GroupState timeouts express identical semantics.) The reference's
 extra timer-dedup ValueState — self-documented as a pessimization,
-AggregationJob.kt:81-107 — is NOT replicated: the single pending
-timeout per key is managed by the engine.
+AggregationJob.kt:81-107 — is NOT replicated.
 
-Alignment detail: the intended fire time is carried IN the state
-(``next_fire``), so pruning and window bounds use the aligned timer
-timestamp exactly like the reference, not the jittery wall clock at
-which the micro-batch happened to run.
+Grouping and timers: like Job 1's sequence, the operator groups by the
+key's hash bucket (``streaming.sequence.key_bucket``), not by the key,
+so data crosses to Python once per (bucket, micro-batch), at most
+``N_BUCKETS`` calls a batch. Each key still has its own timer: the state
+carries every key's intended fire time (``next_fire``, always on an
+``emit_every_ms`` boundary), and the bucket's one GroupState timeout is
+armed at the earliest of them. Every call, timer or data, first fires
+each key whose ``next_fire`` has passed, then adds the batch's rows.
+Firing on the data path is what makes the timers fire under load:
+Spark runs a group's timeout only in a batch that brings the group no
+data, so a key (or, with buckets, any key of its bucket) that gets data
+in every batch would otherwise never emit, where Flink's timers fire
+whether or not data arrives. Pruning and window bounds use the aligned
+``next_fire``, like the reference, not the jittery wall clock at which
+the micro-batch happened to run.
 
-Scale: state is (keys × events-in-window), sharded across executors by
-the grouping key — the same bound and sharding as Flink's keyBy.
+Counting: an event is stamped with the processing time of its batch
+(AggregationJob.kt:136), and the state keeps counts per (arrival slot,
+type), a slot being ``emit_every_ms`` long, instead of one entry per
+event. Every fire time is a slot boundary, so when ``window_ms`` is a
+multiple of ``emit_every_ms`` the cutoff ``now - window_ms`` is one too,
+and dropping whole slots before it keeps exactly the events stamped at
+or after it. ``make_heartbeat_fn`` rejects any other window.
+
+Scale:
+
+- State is per bucket: at most ``N_BUCKETS`` state rows, partitioned by
+  bucket across executors. A key's share is bounded by
+  ``window_ms ÷ emit_every_ms`` slots × event types (120 × types at the
+  reference cadence), not by the event rate, and a key leaves the state
+  once its window drains, so a bucket holds the keys active in the last
+  window, not every key ever seen.
+- Writes. Any call that changes a bucket rewrites the whole bucket, so a
+  batch writes about active keys ÷ ``N_BUCKETS`` keys per touched
+  bucket, not one row per touched key. All timers sit on one
+  ``emit_every_ms`` grid, so the first batch after a grid point fires,
+  and so rewrites, every active key, per key or per bucket alike. Over
+  a populated 50,000-key pool (``scripts/bench_heartbeat_state.py``,
+  3 cores) a 1,500-event batch took 3.2–4.1 s of add-batch against
+  59–67 s with per-key calls, and either form uploaded about 1.0 MB of
+  state a batch.
+- Parallelism. The stateful stage has at most ``N_BUCKETS`` non-empty
+  tasks, whatever ``spark.sql.shuffle.partitions`` is.
+- ``N_BUCKETS`` and the hash are part of the checkpoint format, shared
+  with Job 1 (see streaming/sequence.py). A checkpoint with per-key
+  state (key schema ``originalId string``) fails at start with
+  ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import json
+from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
@@ -49,15 +87,21 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from flink_tank_spark.streaming.sequence import key_bucket
+
 WINDOW_MS = 10 * 60 * 1000  # AggregationJob.kt:53
 EMIT_EVERY_MS = 5 * 1000  # AggregationJob.kt:54
 
-# state: intended next fire time + parallel event arrays (ts, type)
+# state per bucket: its keys with their next fire time, then every key's
+# event counts per (arrival slot, type), key given by its index in `keys`
 _STATE_SCHEMA = StructType(
     [
-        StructField("next_fire", LongType()),
-        StructField("ev_ts", ArrayType(LongType())),
-        StructField("ev_type", ArrayType(StringType())),
+        StructField("keys", ArrayType(StringType())),
+        StructField("next_fire", ArrayType(LongType())),
+        StructField("count_key", ArrayType(IntegerType())),
+        StructField("count_slot", ArrayType(LongType())),
+        StructField("count_type", ArrayType(StringType())),
+        StructField("count_n", ArrayType(LongType())),
     ]
 )
 
@@ -80,7 +124,35 @@ def _iso(ms: int) -> str:
     )
 
 
+def _load(state: GroupState) -> dict[str, tuple[int, Counter]]:
+    """key -> (next_fire, Counter of (slot, type) -> events)."""
+    if not state.exists:
+        return {}
+    keys, next_fire, c_key, c_slot, c_type, c_n = state.get
+    out = {k: (f, Counter()) for k, f in zip(keys, next_fire)}
+    for i, slot, t, n in zip(c_key, c_slot, c_type, c_n):
+        out[keys[i]][1][(slot, t)] = n
+    return out
+
+
+def _store(keys: dict[str, tuple[int, Counter]]) -> tuple:
+    c_key, c_slot, c_type, c_n = [], [], [], []
+    for i, (_, counts) in enumerate(keys.values()):
+        for (slot, t), n in counts.items():
+            c_key.append(i)
+            c_slot.append(slot)
+            c_type.append(t)
+            c_n.append(n)
+    return list(keys), [f for f, _ in keys.values()], c_key, c_slot, c_type, c_n
+
+
 def make_heartbeat_fn(window_ms: int = WINDOW_MS, emit_every_ms: int = EMIT_EVERY_MS):
+    if window_ms % emit_every_ms:
+        raise ValueError(
+            f"window_ms ({window_ms}) must be a multiple of emit_every_ms "
+            f"({emit_every_ms}): counts are kept per emit slot"
+        )
+
     def aligned_next(now_ms: int) -> int:
         # ((t / 5000) + 1) * 5000 — AggregationJob.kt:150
         return (now_ms // emit_every_ms + 1) * emit_every_ms
@@ -89,54 +161,50 @@ def make_heartbeat_fn(window_ms: int = WINDOW_MS, emit_every_ms: int = EMIT_EVER
         key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         now_wall = state.getCurrentProcessingTimeMs()
-
-        if state.hasTimedOut:
-            next_fire, ev_ts, ev_type = state.get
-            now = next_fire  # the aligned time this timer was meant for
-            cutoff = now - window_ms
-            kept = [(t, e) for t, e in zip(ev_ts, ev_type) if t >= cutoff]
-            counts: dict[str, int] = {}
-            for _, e in kept:
-                counts[e] = counts.get(e, 0) + 1
+        keys = _load(state)
+        out = []
+        # fire every due key first, on data calls too (see module doc);
+        # `now` is the aligned time the key's timer was meant for
+        for k, (now, counts) in list(keys.items()):
+            if now > now_wall:
+                continue
+            first_kept = (now - window_ms) // emit_every_ms
+            kept = Counter({st: n for st, n in counts.items() if st[0] >= first_kept})
+            by_type: Counter = Counter()
+            for (_, t), n in kept.items():
+                by_type[t] += n
             # ALWAYS emit, zero counts included (AggregationJob.kt:171-186)
-            out = pd.DataFrame(
-                [
-                    (
-                        key[0],
-                        _iso(now - window_ms),
-                        _iso(now),
-                        len(kept),
-                        json.dumps(dict(sorted(counts.items())), separators=(",", ":")),
-                    )
-                ],
-                columns=list(METRICS_SCHEMA.fieldNames()),
+            out.append(
+                (
+                    k,
+                    _iso(now - window_ms),
+                    _iso(now),
+                    sum(by_type.values()),
+                    json.dumps(dict(sorted(by_type.items())), separators=(",", ":")),
+                )
             )
             if kept:
-                nxt = aligned_next(max(now, now_wall))
-                state.update((nxt, [t for t, _ in kept], [e for _, e in kept]))
-                state.setTimeoutDuration(max(nxt - now_wall, 1))
+                keys[k] = (aligned_next(max(now, now_wall)), kept)
             else:
                 # window drained: stop ticking until new data arrives
-                state.remove()
-            yield out
-            return
+                del keys[k]
 
         # data path: stamp arrivals with processing time (AggregationJob.kt:136)
-        new_ts: list[int] = []
-        new_type: list[str] = []
+        slot = now_wall // emit_every_ms
         for pdf in pdf_iter:
-            n = len(pdf)
-            new_ts.extend([now_wall] * n)
-            new_type.extend(list(pdf["eventType"]))
-        if state.exists:
-            next_fire, ev_ts, ev_type = state.get
-            ev_ts = list(ev_ts) + new_ts
-            ev_type = list(ev_type) + new_type
-        else:
-            next_fire, ev_ts, ev_type = aligned_next(now_wall), new_ts, new_type
-        state.update((next_fire, ev_ts, ev_type))
-        state.setTimeoutDuration(max(next_fire - now_wall, 1))
-        return
+            for (k, t), n in Counter(zip(pdf["originalId"], pdf["eventType"])).items():
+                if k not in keys:
+                    keys[k] = (aligned_next(now_wall), Counter())
+                keys[k][1][(slot, t)] += n
+
+        if keys:
+            state.update(_store(keys))
+            nxt = min(f for f, _ in keys.values())
+            state.setTimeoutDuration(max(nxt - now_wall, 1))
+        elif state.exists:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=METRICS_SCHEMA.fieldNames())
 
     return fn
 
@@ -147,11 +215,17 @@ def sliding_metrics_heartbeat(
     emit_every_ms: int = EMIT_EVERY_MS,
 ) -> DataFrame:
     """STREAMING exact-parity variant of Job 2's aggregation: group the
-    ProcessedEvent stream by originalId and run the timer-based window."""
-    return processed_df.groupBy("originalId").applyInPandasWithState(
-        make_heartbeat_fn(window_ms, emit_every_ms),
-        outputStructType=METRICS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    ProcessedEvent stream by the bucket of originalId and run the
+    timer-based window for every key of the bucket."""
+    return (
+        processed_df.select("originalId", "eventType")
+        .withColumn("bucket", key_bucket("originalId"))
+        .groupBy("bucket")
+        .applyInPandasWithState(
+            make_heartbeat_fn(window_ms, emit_every_ms),
+            outputStructType=METRICS_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        )
     )

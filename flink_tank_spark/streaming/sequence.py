@@ -49,8 +49,9 @@ key. That pays while a batch holds many more distinct keys than
   from 129 to 165 MB: with 50 keys there are no calls to save, and a
   call takes in its whole bucket before it returns a row.
 
-``N_BUCKETS`` and the hash are part of the checkpoint format, because
-the bucket id is the state key. A checkpoint with per-key state (key
+``N_BUCKETS`` and the hash (``key_bucket``, which Job 2's heartbeat
+shares) are part of both jobs' checkpoint format, because the bucket id
+is the state key. A checkpoint with per-key state (key
 schema ``id string``) fails at start with
 ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``. Another bucket count or hash
 would keep the key schema and silently move keys to buckets that do not
@@ -63,7 +64,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -75,6 +76,12 @@ from pyspark.sql.types import (
 )
 
 N_BUCKETS = 64
+
+
+def key_bucket(key_col: str) -> Column:
+    """The state key of both stateful jobs: ``key_col``'s hash bucket."""
+    return F.pmod(F.xxhash64(key_col), F.lit(N_BUCKETS))
+
 
 # state per bucket: the bucket's keys and each key's latest sequence
 _STATE_SCHEMA = StructType(
@@ -132,7 +139,7 @@ def with_sequence_stream(valid_df: DataFrame) -> DataFrame:
     equivalent monotone per-partition id) defining within-batch order.
     """
     return (
-        valid_df.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(N_BUCKETS)))
+        valid_df.withColumn("bucket", key_bucket("id"))
         .groupBy("bucket")
         .applyInPandasWithState(
             _assign_sequences,

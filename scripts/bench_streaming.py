@@ -115,13 +115,15 @@ def main() -> int:
         # -> timer-based sliding heartbeat (streaming/heartbeat.py), the
         # reference's AggregationJob. Two key cardinalities: 50 (the
         # reference's user pool, EventProducer.kt:20) and 50k (state-
-        # scale: one GroupState row per key). Reference cadence: 10 min
-        # window / 5 s emit, so a multi-second drain fires real timers.
+        # scale: every key's window, held in its bucket's state row).
+        # Reference cadence: 10 min window / 5 s emit, so a multi-second
+        # drain fires real timers.
         from flink_tank_spark.streaming.heartbeat import sliding_metrics_heartbeat
         from flink_tank_spark.streaming.jobs import (
             parse_processed_events,
             serialize_processed,
         )
+        from flink_tank_spark.streaming.sequence import key_bucket
 
         pe = parse_processed_events(spark.read.parquet(ok_dir))
         job2 = {}
@@ -154,8 +156,11 @@ def main() -> int:
             ).text(src2)
             # hash remap leaves some of the n_keys pool unused (and at
             # small SFs processed < n_keys): the state plateau target is
-            # the ACTUAL distinct key count, computed batch-side
+            # the ACTUAL distinct key count's buckets, computed batch-side
             expect_keys = remapped.select("originalId").distinct().count()
+            expect_rows = (
+                remapped.select(key_bucket("originalId")).distinct().count()
+            )
 
             raw2 = (
                 spark.readStream.option("maxFilesPerTrigger", str(cpus))
@@ -204,7 +209,7 @@ def main() -> int:
                     state_rows = p["stateOperators"][0]["numRowsTotal"]
                 if seen >= processed and drained_at is None:
                     drained_at = time.perf_counter()
-                if drained_at is not None and state_rows == expect_keys:
+                if drained_at is not None and state_rows == expect_rows:
                     break
                 time.sleep(0.2)
             q.stop()
@@ -224,10 +229,11 @@ def main() -> int:
                 "events_per_sec": round(processed / j2_wall, 1),
                 "wall_sec": round(j2_wall, 2),
                 "state_rows": state_rows,
+                "expected_rows": expect_rows,
                 "expected_keys": expect_keys,
                 "state_store": "rocksdb" if provider else "hdfs-backed",
             }
-            job2_ok = job2_ok and state_rows == expect_keys
+            job2_ok = job2_ok and state_rows == expect_rows
 
         # Chained two-job dataflow (jobs/pipeline.py): Job-1 drains the
         # wire while Job-2 concurrently consumes Job-1's output and runs

@@ -76,10 +76,32 @@ def _read_wire(dirpath: str) -> list[str]:
     return out
 
 
+def _committed_wire(sink_dir: str) -> list[str]:
+    """Lines of the files a streaming file sink has committed, as its
+    ``_spark_metadata`` log lists them. The sink writes a batch's part
+    files into ``sink_dir`` before it commits the batch, and a stopped
+    query deletes the part files of the batch it did not commit."""
+    meta = os.path.join(sink_dir, "_spark_metadata")
+    if not os.path.isdir(meta):
+        return []
+    names: set[str] = set()
+    for log in os.listdir(meta):
+        if not log.split(".")[0].isdigit():
+            continue
+        with open(os.path.join(meta, log)) as f:
+            entries = [json.loads(line) for line in f.read().splitlines()[1:] if line]
+        names.update(os.path.basename(e["path"]) for e in entries if e["action"] == "add")
+    out: list[str] = []
+    for name in sorted(names):
+        with open(os.path.join(sink_dir, name)) as f:
+            out += [line.rstrip("\n") for line in f if line.strip()]
+    return out
+
+
 def _metric_maxima(metrics_dir: str) -> dict[str, dict]:
-    """Per key, the emission with the highest totalEventCount."""
+    """Per key, the committed emission with the highest totalEventCount."""
     best: dict[str, dict] = {}
-    for line in _read_wire(metrics_dir):
+    for line in _committed_wire(metrics_dir):
         m = json.loads(line)
         cur = best.get(m["userId"])
         if cur is None or m["totalEventCount"] > cur["totalEventCount"]:

@@ -1,19 +1,138 @@
-"""Wall-clock test for the exact-parity heartbeat aggregator.
+"""Tests of the exact-parity heartbeat aggregator.
 
-Time-dependent by nature (processing-time timers), so assertions are
-structural: emissions happen on the timer cadence, counts reflect the
-events seen, a zero-count heartbeat appears after input stops (the
-reference's always-emit contract, AggregationJob.kt:171-186), and the
-window bounds are exactly [now-window, now].
+The wall-clock tests are time-dependent by nature (processing-time
+timers), so their assertions are structural: emissions happen on the
+timer cadence, also for a key that gets data in every micro-batch,
+counts reflect the events seen, a zero-count heartbeat appears after
+input stops (the reference's always-emit contract,
+AggregationJob.kt:171-186), and the window bounds are exactly
+[now-window, now]. The bucket function itself is tested without Spark,
+driven through a fake ``GroupState`` whose processing time the test
+sets.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import pickle
 import time
 
-from flink_tank_spark.streaming.heartbeat import sliding_metrics_heartbeat
+import pandas as pd
+import pytest
+
+from flink_tank_spark.streaming.heartbeat import (
+    make_heartbeat_fn,
+    sliding_metrics_heartbeat,
+)
+
+
+class FakeState:
+    """The parts of ``GroupState`` the heartbeat uses; the state value
+    goes through pickle, as Spark stores it."""
+
+    def __init__(self, value: tuple | None = None):
+        self.value = None if value is None else pickle.dumps(value)
+        self.now = 0
+        self.hasTimedOut = False
+        self.fires_at: int | None = None
+        self.removed = False
+
+    def getCurrentProcessingTimeMs(self) -> int:
+        return self.now
+
+    @property
+    def exists(self) -> bool:
+        return self.value is not None
+
+    @property
+    def get(self) -> tuple:
+        return pickle.loads(self.value)
+
+    def update(self, value: tuple) -> None:
+        self.value = pickle.dumps(tuple(value))
+
+    def remove(self) -> None:
+        self.value = None
+        self.removed = True
+
+    def setTimeoutDuration(self, ms: int) -> None:
+        self.fires_at = self.now + ms
+
+
+def _call(fn, state: FakeState, now: int, rows: list | None = None) -> list[tuple]:
+    """One call at processing time ``now``: a data call with ``rows``
+    of (originalId, eventType), else a timer call. Returns the emitted
+    (userId, windowEnd, totalEventCount, eventTypeCounts)."""
+    state.now = now
+    state.hasTimedOut = rows is None
+    state.fires_at = None
+    data = [] if rows is None else [pd.DataFrame(rows, columns=["originalId", "eventType"])]
+    out = [r for pdf in fn((0,), iter(data), state) for r in pdf.itertuples(index=False)]
+    return [(r.userId, r.windowEnd, r.totalEventCount, json.loads(r.eventTypeCounts))
+            for r in out]
+
+
+def _timers_until(fn, state: FakeState, end: int) -> list[tuple]:
+    """Runs the bucket's timer calls, each at its armed time, up to ``end``."""
+    out = []
+    while state.exists and state.fires_at is not None and state.fires_at <= end:
+        out += _call(fn, state, state.fires_at)
+    return out
+
+
+def _end(ms: int) -> str:
+    return pd.Timestamp(ms, unit="ms").strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
+
+
+def test_bucket_fn_keeps_an_event_stamped_at_the_cutoff():
+    fn = make_heartbeat_fn(window_ms=60_000, emit_every_ms=5_000)
+    state = FakeState()
+    assert _call(fn, state, 99_999, [("a", "x")]) == []
+    assert state.fires_at == 100_000
+    # a data call fires the due key before it adds its rows
+    assert _call(fn, state, 100_000, [("a", "y")]) == [("a", _end(100_000), 1, {"x": 1})]
+    out = {end: (n, counts) for _, end, n, counts in _timers_until(fn, state, 165_000)}
+    # cutoff 95,000: both events; cutoff 100,000: the event stamped at
+    # 100,000 stays, the one stamped at 99,999 (one slot earlier) goes
+    assert out[_end(155_000)] == (2, {"x": 1, "y": 1})
+    assert out[_end(160_000)] == (1, {"y": 1})
+    assert out[_end(165_000)] == (0, {})
+    assert state.removed and not state.exists
+
+
+def test_bucket_fn_fires_keys_of_one_bucket_independently():
+    fn = make_heartbeat_fn(window_ms=20_000, emit_every_ms=5_000)
+    # one bucket, two keys armed for different times
+    state = FakeState((["a", "b"], [5_000, 10_000], [0, 1], [0, 1], ["x", "y"], [1, 2]))
+    assert _call(fn, state, 5_000) == [("a", _end(5_000), 1, {"x": 1})]
+    assert state.fires_at == 10_000
+    # b keeps its own next fire; a data call for b fires both due keys
+    out = _call(fn, state, 12_000, [("b", "y")])
+    assert sorted(out) == [("a", _end(10_000), 1, {"x": 1}), ("b", _end(10_000), 2, {"y": 2})]
+    assert state.fires_at == 15_000
+    assert _call(fn, state, 15_000) == [
+        ("a", _end(15_000), 1, {"x": 1}), ("b", _end(15_000), 3, {"y": 3}),
+    ]
+
+
+def test_bucket_fn_drops_drained_keys_and_removes_the_empty_bucket():
+    fn = make_heartbeat_fn(window_ms=10_000, emit_every_ms=5_000)
+    state = FakeState()
+    _call(fn, state, 1_000, [("a", "x")])
+    _call(fn, state, 6_000, [("b", "x")])
+    # a's window drains at 15,000; b's only at 20,000
+    out = _timers_until(fn, state, 15_000)
+    assert ("a", _end(15_000), 0, {}) in out
+    keys = state.get[0]
+    assert keys == ["b"] and not state.removed
+    assert _timers_until(fn, state, 20_000)[-1] == ("b", _end(20_000), 0, {})
+    assert state.removed and not state.exists
+
+
+def test_bucket_fn_rejects_a_window_that_is_not_whole_slots():
+    with pytest.raises(ValueError):
+        make_heartbeat_fn(window_ms=7_000, emit_every_ms=5_000)
 
 
 def test_heartbeat_emits_and_decays(spark, tmp_path):
@@ -69,3 +188,51 @@ def test_heartbeat_emits_and_decays(spark, tmp_path):
         ws = dt.datetime.strptime(r.windowStart, "%Y-%m-%dT%H:%M:%S.%fZ")
         we = dt.datetime.strptime(r.windowEnd, "%Y-%m-%dT%H:%M:%S.%fZ")
         assert (we - ws) == dt.timedelta(seconds=4)
+
+
+def test_heartbeat_emits_on_cadence_for_a_key_with_data_in_every_batch(spark, tmp_path):
+    """A key that gets data in every micro-batch still emits on its
+    cadence while the data flows: the reference's timers fire whether
+    or not data arrives (AggregationJob.kt:150-204), whereas Spark runs
+    a group's timeout only in a batch without data for it."""
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    n = 10
+    for i in range(n):  # one event per file, so one per micro-batch
+        with open(os.path.join(src, f"e{i:02d}.jsonl"), "w") as f:
+            f.write(f'{{"originalId":"a","eventType":"{"xy"[i % 2]}"}}\n')
+    raw = (
+        spark.readStream.schema("originalId string, eventType string")
+        .option("maxFilesPerTrigger", "1")
+        .json(src)
+    )
+    metrics = sliding_metrics_heartbeat(raw, window_ms=60_000, emit_every_ms=500)
+    q = (
+        metrics.writeStream.format("memory")
+        .queryName("hb_busy")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    try:
+        deadline = time.time() + 60
+        rows = []
+        while time.time() < deadline:
+            rows = spark.sql("SELECT * FROM hb_busy").collect()
+            if any(r.totalEventCount == n for r in rows):
+                break
+            time.sleep(0.5)
+    finally:
+        q.stop()
+
+    rows = sorted(rows, key=lambda r: r.windowEnd)
+    # emitted while data still flowed: the window held fewer than n events
+    busy = [r for r in rows if r.totalEventCount < n]
+    assert len(busy) >= n // 2, [r.totalEventCount for r in rows]
+    totals = [r.totalEventCount for r in busy]
+    assert totals == sorted(set(totals)), totals  # one emission per cadence tick
+    for r in rows:
+        t = r.totalEventCount
+        assert r.windowEnd[-4:-1] in ("000", "500")  # on the 500 ms grid
+        counts = json.loads(r.eventTypeCounts)
+        assert set(counts) <= {"x", "y"} and sum(counts.values()) == t
+    assert rows[-1].totalEventCount == n, "no emission after the last event"

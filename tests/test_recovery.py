@@ -2,9 +2,10 @@
 
 The exactly-once claims of the lake ingest job (jobs/ingest_job.py —
 Structured Streaming file sink + checkpoint) and the bounded-state claim
-of the heartbeat aggregator (streaming/heartbeat.py — state rows ≤ key
-cardinality, the reference's own bound via its 50-user pool,
-EventProducer.kt:20) are asserted in docstrings elsewhere; these tests
+of the heartbeat aggregator (streaming/heartbeat.py — one state row per
+key bucket that holds an active key, so state rows ≤ key cardinality,
+the reference's own bound via its 50-user pool, EventProducer.kt:20)
+are asserted in docstrings elsewhere; these tests
 EXERCISE them across a process-level interruption and a soak:
 
 - kill the ingest query mid-stream (abrupt ``stop()`` between / inside
@@ -12,9 +13,10 @@ EXERCISE them across a process-level interruption and a soak:
   every input record exactly once — no duplicates from replayed batches
   (the sink's transaction log drops uncommitted files), no losses.
 - run the heartbeat under steady multi-batch load and assert the state
-  store plateaus at exactly the key cardinality, then drains to zero
-  after the windows empty (activity-based heartbeat: per-key state is
-  removed when its window drains, AggregationJob.kt:193-204 parity).
+  store plateaus at exactly the number of buckets the key pool hashes
+  to, then drains to zero after the windows empty (activity-based
+  heartbeat: a key leaves the state when its window drains, and an
+  empty bucket is removed, AggregationJob.kt:193-204 parity).
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import time
 
 from flink_tank_spark.jobs.ingest_job import start_ingest
 from flink_tank_spark.streaming.heartbeat import sliding_metrics_heartbeat
+from flink_tank_spark.streaming.sequence import key_bucket
 
 _ARRIVAL = 0
 
@@ -38,6 +41,12 @@ def _write_batch(dirpath: str, name: str, messages: list[str]) -> None:
             f.write(f"{_ARRIVAL}\t{m}\n")
             _ARRIVAL += 1
     os.rename(tmp, os.path.join(dirpath, f"{name}.jsonl"))
+
+
+def _buckets(spark, keys: range) -> int:
+    """State rows the heartbeat holds for keys ``u<k>``: their distinct buckets."""
+    ids = spark.createDataFrame([(f"u{k}",) for k in keys], "originalId string")
+    return ids.select(key_bucket("originalId")).distinct().count()
 
 
 def _event(i: int) -> str:
@@ -112,13 +121,15 @@ def test_ingest_exactly_once_across_kill_and_restart(spark, tmp_path):
 
 def test_heartbeat_state_plateaus_at_key_cardinality(spark, tmp_path):
     """Soak the heartbeat aggregator: steady events for a FIXED key pool
-    must hold the state store at exactly |keys| rows (one GroupState per
-    active user — the reference's state bound), and once input stops and
-    windows age out, state must drain to 0 (activity-based heartbeat
-    removes drained keys instead of ticking forever)."""
+    must hold the state store at exactly one row per bucket the pool
+    hashes to (every active user's state, the reference's state bound,
+    folded into its bucket), and once input stops and windows age out,
+    state must drain to 0 (activity-based heartbeat removes drained keys
+    instead of ticking forever)."""
     src = str(tmp_path / "in")
     os.makedirs(src)
     n_keys = 30
+    n_rows = _buckets(spark, range(n_keys))
 
     def feed(batch: str, keys: range) -> None:
         with open(os.path.join(src, f".{batch}.tmp"), "w") as f:
@@ -150,13 +161,13 @@ def test_heartbeat_state_plateaus_at_key_cardinality(spark, tmp_path):
             if fed < 8 and time.time() - (deadline - 60) > fed * 1.0:
                 feed(f"b{fed}", range(0, 5))  # keys u0..u4 stay hot
                 fed += 1
-            if fed >= 8 and observed and max(observed) >= n_keys:
+            if fed >= 8 and observed and max(observed) >= n_rows:
                 break
             time.sleep(0.25)
         assert observed, "no state metrics reported"
-        # plateau AT key cardinality: all keys have state, never more
-        # (state rows are per-key, not per-event/per-window)
-        assert max(observed) == n_keys, (max(observed), n_keys)
+        # plateau AT the pool's bucket count: all keys have state, never
+        # more (state rows are per bucket, not per-event/per-window)
+        assert max(observed) == n_rows, (max(observed), n_rows)
 
         # stop feeding; windows (3 s) drain; state must go to ZERO
         drain_deadline = time.time() + 45
@@ -176,10 +187,10 @@ def test_heartbeat_state_plateaus_at_key_cardinality(spark, tmp_path):
 def test_heartbeat_rocksdb_state_survives_restart(spark, tmp_path):
     """The heartbeat aggregator under the RocksDB state-store provider
     (the off-heap/spillable configuration a state-scale deployment
-    runs): state plateaus at key cardinality, survives a stop/restart
-    from the checkpoint (RocksDB snapshots + changelog live under the
-    checkpoint dir), counts new keys on top of recovered state, and
-    drains to zero when input stops."""
+    runs): state plateaus at the key pool's bucket count, survives a
+    stop/restart from the checkpoint (RocksDB snapshots + changelog live
+    under the checkpoint dir), counts new keys' buckets on top of
+    recovered state, and drains to zero when input stops."""
     provider = (
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider"
@@ -230,19 +241,22 @@ def test_heartbeat_rocksdb_state_survives_restart(spark, tmp_path):
         feed("b0", range(20))
         q = start()
         try:
-            assert wait_state(q, 20) == 20
+            n_rows = _buckets(spark, range(20))
+            assert wait_state(q, n_rows) == n_rows
         finally:
             q.stop()  # abrupt: no drain, state lives only in RocksDB
             q.awaitTermination(30)
         # restart from the same checkpoint; recovered state + new keys.
-        # Keep one old key hot so recovery is observable even if the
-        # first batch replays.
+        # The new keys alone hash to fewer buckets than all 25 together,
+        # so reaching the 25-key count needs the recovered rows.
         feed("b1", range(20, 25))
         q = start()
         try:
-            assert wait_state(q, 25) == 25
+            n_rows = _buckets(spark, range(25))
+            assert _buckets(spark, range(20, 25)) < n_rows
+            assert wait_state(q, n_rows) == n_rows
             # stop feeding: windows (45 s) empty, heartbeat removes
-            # per-key state instead of ticking forever
+            # drained keys and empty buckets instead of ticking forever
             assert wait_state(q, 0, timeout=120) == 0
         finally:
             q.stop()
