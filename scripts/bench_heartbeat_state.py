@@ -14,8 +14,8 @@ Per data batch it reports, from the batch's progress: ``addBatch`` ms,
 the state operator's ``allUpdatesTimeMs`` (summed over tasks),
 ``numRowsTotal``, ``numRowsUpdated`` and RocksDB's
 ``rocksdbBytesCopied`` (bytes the batch uploaded to the checkpoint);
-and the same figures summed over the timer batches that ran while the
-drains did. Prints ONE JSON line.
+and the number, summed ``addBatch`` ms and uploaded bytes of the timer
+batches that ran before it. Prints ONE JSON line.
 
 Run it from the root of a checkout; it measures that checkout's
 ``flink_tank_spark`` (Spark's Python workers import the package from the
@@ -38,6 +38,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.getcwd())
+
+FILE_TIMEOUT_S = 600.0  # longest wait for one file's data batch
 
 
 def _write(path: str, ids: list[str]) -> None:
@@ -72,7 +74,6 @@ def main() -> int:
     ap.add_argument("--batches", type=int, default=4)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--cpus", type=int, default=3)
-    ap.add_argument("--timeout", type=float, default=600.0, help="seconds a file may take")
     args = ap.parse_args()
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "2g")
 
@@ -97,7 +98,7 @@ def main() -> int:
         for b, ids in enumerate(plan):
             last = max(progress, default=-1)
             _write(os.path.join(d["processed"], f"batch-{b:04d}.txt"), ids)
-            deadline = time.time() + args.timeout
+            deadline = time.time() + FILE_TIMEOUT_S
             data = None
             while data is None and time.time() < deadline and q.isActive:
                 for p in q.recentProgress:
