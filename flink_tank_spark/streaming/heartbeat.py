@@ -43,23 +43,44 @@ multiple of ``emit_every_ms`` the cutoff ``now - window_ms`` is one too,
 and dropping whole slots before it keeps exactly the events stamped at
 or after it. ``make_heartbeat_fn`` rejects any other window.
 
-Scale:
+Scale: the buckets pay while a batch holds many more distinct keys
+than ``N_BUCKETS``. ``chain_drain``'s 1,500 events reach about 1,400
+keys, and Job 2 then makes 64 calls a batch instead of about 1,400.
+Figures below are from 3 cores:
 
 - State is per bucket: at most ``N_BUCKETS`` state rows, partitioned by
   bucket across executors. A key's share is bounded by
-  ``window_ms ÷ emit_every_ms`` slots × event types (120 × types at the
-  reference cadence), not by the event rate, and a key leaves the state
-  once its window drains, so a bucket holds the keys active in the last
-  window, not every key ever seen.
+  ``window_ms ÷ emit_every_ms + 1`` slots × event types (121 × types
+  at the reference cadence), not by the event rate, and a key leaves
+  the state once its window drains, so a bucket holds the keys active
+  in the last window, not every key ever seen.
+- Few keys. The reference's 50-key pool fills 37 buckets, so there are
+  almost no calls to save, and a data batch also fires the keys that
+  are due. With 10-event batches over 50 keys
+  (``scripts/bench_heartbeat_state.py --keys 50 --events 10``, 40
+  batches) the median data batch took 1.21 s of add-batch against
+  1.12 s with per-key calls, and wrote 5.8 KB of state against 4.6 KB.
+  A 100,000-event drain over the same pool (``scripts/bench_streaming.py``
+  at sf0.1) took 2.7 s against 3.2–3.4 s, and perfbench's
+  ``chain_paced`` (10-event files over 50 keys) was not slower end to
+  end: median latency 10.4 s against 12.9 s over 6 pairs.
 - Writes. Any call that changes a bucket rewrites the whole bucket, so a
   batch writes about active keys ÷ ``N_BUCKETS`` keys per touched
-  bucket, not one row per touched key. All timers sit on one
-  ``emit_every_ms`` grid, so the first batch after a grid point fires,
-  and so rewrites, every active key, per key or per bucket alike. Over
-  a populated 50,000-key pool (``scripts/bench_heartbeat_state.py``,
-  3 cores) a 1,500-event batch took 3.2–4.1 s of add-batch against
-  59–67 s with per-key calls, and either form uploaded about 1.0 MB of
-  state a batch.
+  bucket, not one row per touched key, and a batch of a few hundred
+  events over a large pool touches nearly every bucket. All timers sit
+  on one ``emit_every_ms`` grid, so the first batch after a grid point
+  fires, and so rewrites, every active key, per key or per bucket
+  alike. Over a populated 50,000-key pool
+  (``scripts/bench_heartbeat_state.py``) a 1,500-event batch took
+  3.2–4.1 s of add-batch against 59–67 s with per-key calls, a
+  150-event batch 1.4–2.4 s against 58–69 s, and either form uploaded
+  about 1 MB of state a batch.
+- Memory. A call loads its bucket's whole state into Python: about
+  active keys ÷ ``N_BUCKETS`` keys with their slot counts. With 100,000
+  active keys (one per event, RocksDB store, ``scripts/bench_streaming.py``
+  at sf0.1) that is about 1,600 keys a call, and the drain took
+  2.9–3.7 s against 71–78 s with per-key calls; 1,000,000 active keys,
+  about 15,600 a call, were not measured.
 - Parallelism. The stateful stage has at most ``N_BUCKETS`` non-empty
   tasks, whatever ``spark.sql.shuffle.partitions`` is.
 - ``N_BUCKETS`` and the hash are part of the checkpoint format, shared

@@ -130,6 +130,38 @@ def test_bucket_fn_drops_drained_keys_and_removes_the_empty_bucket():
     assert state.removed and not state.exists
 
 
+def test_bucket_fn_bounds_a_key_by_its_window_slots():
+    """A key's state is bounded by its window's slots, not by how many
+    events it has had: after every call the key holds at most
+    window ÷ emit + 1 slots × types counts, none before the cutoff of
+    its last emission."""
+    window, every, types = 30_000, 5_000, ("x", "y", "z")
+    fn = make_heartbeat_fn(window_ms=window, emit_every_ms=every)
+    state = FakeState()
+    bound = (window // every + 1) * len(types)
+    cutoff_slot, emitted, now = None, 0, 0
+    for i in range(300):
+        now += 1_300
+        if i % 50 < 35:  # data in every batch, for this key and another
+            rows = [("a", types[(i + j) % 3]) for j in range(i % 4 + 1)] + [("b", "x")]
+            out = _call(fn, state, now, rows)
+        else:  # quiet: only timer calls
+            out = _timers_until(fn, state, now)
+        for key, end, _n, _counts in out:
+            if key == "a":
+                emitted += 1
+                cutoff_slot = (pd.Timestamp(end).value // 1_000_000 - window) // every
+        keys, _, c_key, c_slot, c_type, _ = state.get
+        a = keys.index("a")
+        entries = [(s, t) for k, s, t in zip(c_key, c_slot, c_type) if k == a]
+        assert len(entries) == len(set(entries)) <= bound, (i, len(entries))
+        if cutoff_slot is not None:
+            assert min(s for s, _ in entries) >= cutoff_slot, (i, cutoff_slot)
+    # a emitted on every tick of a run 13 windows long, so slots it
+    # failed to prune would have broken the bound many times over
+    assert emitted >= 300 * 1_300 // every - 1
+
+
 def test_bucket_fn_rejects_a_window_that_is_not_whole_slots():
     with pytest.raises(ValueError):
         make_heartbeat_fn(window_ms=7_000, emit_every_ms=5_000)
