@@ -6,7 +6,7 @@ deserialization (``EventProcessorJob.kt:57-63``, ``AggregationJob.kt:
 (``EventProcessorJob.kt:65-74``, ``AggregationJob.kt:233-241``);
 checkpointing every 60 s ⇒ at-least-once (SURVEY §2.2) — Structured
 Streaming's Kafka sink + checkpointLocation gives the same guarantee.
-Job 1 writes both of its topics from one query through
+Job 1 writes both of its topics in one write per micro-batch through
 :func:`kafka_batch_sink` (streaming/jobs.start_processor_query); Job 2
 writes its one topic through :func:`write_kafka_stream`.
 
@@ -39,21 +39,21 @@ def read_kafka_stream(
     brokers: str,
     topic: str,
     starting_offsets: str = "earliest",
+    max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
     """S1/S2: value-only string deserialization + Kafka offset as the
     per-partition arrival order (what Flink's FIFO per-partition order
-    provides implicitly)."""
-    raw = (
+    provides implicitly). ``max_offsets_per_trigger`` caps the records
+    of one micro-batch (the source's ``maxOffsetsPerTrigger``)."""
+    reader = (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", brokers)
         .option("subscribe", topic)
         .option("startingOffsets", starting_offsets)
-        .load()
     )
-    return raw.select(
-        F.col("value").cast("string").alias("value"),
-        F.col("offset").alias("arrival"),
-    )
+    if max_offsets_per_trigger is not None:
+        reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
+    return reader.load().selectExpr("CAST(value AS STRING) AS value", "offset AS arrival")
 
 
 def read_jsonl_stream(
@@ -114,19 +114,24 @@ def write_kafka_stream(
     return writer.start()
 
 
-def kafka_batch_sink(brokers: str, topic: str):
-    """K1: foreachBatch writer landing a micro-batch's ``value`` strings
-    on one topic — Job 1's processed and error sinks inside its one
-    query (the Kafka counterpart of jobs/pipeline.idempotent_wire_sink).
-    A replayed batch re-sends its records: at-least-once, like the
-    reference."""
+def kafka_batch_sink(brokers: str, topics: dict[str, str]):
+    """K1: foreachBatch writer landing a micro-batch of (``tag``,
+    ``value``) rows on Kafka in ONE write, each row on the topic its tag
+    maps to (the sink's per-row ``topic`` column) — Job 1's processed and
+    error topics inside its one query (the Kafka counterpart of
+    jobs/pipeline.idempotent_wire_sink). A row whose tag has no topic
+    fails the write. A replayed batch re-sends its records:
+    at-least-once, like the reference."""
 
     def write(df: DataFrame, batch_id: int) -> None:
+        topic = None
+        for tag, name in topics.items():
+            when = F.col("tag") == tag
+            topic = F.when(when, name) if topic is None else topic.when(when, name)
         (
-            df.select(F.col("value").cast("binary").alias("value"))
+            df.select(F.col("value").cast("binary").alias("value"), topic.alias("topic"))
             .write.format("kafka")
             .option("kafka.bootstrap.servers", brokers)
-            .option("topic", topic)
             .save()
         )
 

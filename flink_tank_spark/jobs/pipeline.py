@@ -9,10 +9,10 @@ jobs chained through Kafka topics: the event processor consumes
 checkpointed Structured Streaming queries:
 
 - **Job 1** (:func:`start_processor_job`): wire source → parse/route →
-  stateful per-key sequence → enrich → serialize, ONE query feeding the
-  processed and error sinks through a shared checkpoint
-  (streaming/jobs.start_processor_query — the query jobs/event_processor.py
-  runs with Kafka sinks).
+  stateful per-key sequence → enrich → serialize, ONE linear query
+  (streaming/jobs.start_processor_query — the query
+  jobs/event_processor.py runs with a Kafka sink) whose sink writes the
+  processed and error wires in one Spark job per micro-batch.
 - **Job 2** (:func:`start_aggregation_job`): Job-1's processed output →
   lenient parse (failures silently dropped — the reference's error-path
   asymmetry, AggregationJob.kt:246-256) → timer-based sliding-window
@@ -26,10 +26,10 @@ so a replayed (uncommitted) batch rewrites the same file instead of
 minting a new one. Structured Streaming's file source tracks inputs by
 name, which upgrades the file hop to effectively exactly-once and makes
 the chain test's parity assertion strict instead of duplicate-tolerant.
-The sink lands each micro-batch as one file by default — matching the
-reference's operating point (≤10 msg/s out) and keeping the name set
-deterministic — behind a hash shuffle, so the micro-batch itself is
-still computed at full parallelism and only the text write is
+The sink lands each micro-batch as one file per wire by default —
+matching the reference's operating point (≤10 msg/s out) and keeping
+the name set deterministic — behind a hash shuffle, so the micro-batch
+itself is still computed at full parallelism and only the text write is
 single-task; a high-throughput deployment would use the Kafka hop, not
 this shim.
 
@@ -41,6 +41,7 @@ Cadence defaults mirror the reference: 60 s checkpoint intervals
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,45 +53,53 @@ from flink_tank_spark.streaming.heartbeat import (
     sliding_metrics_heartbeat,
 )
 from flink_tank_spark.streaming.jobs import (
+    TAG_ERROR,
+    TAG_PROCESSED,
     parse_processed_events,
     serialize_metrics,
     start_processor_query,
 )
 
 
-def idempotent_wire_sink(dirpath: str, fanout: int = 1):
-    """foreachBatch writer: land a micro-batch of ``value`` strings as
-    deterministically-named text files — ``batch-<id>.txt`` at the
-    default ``fanout=1``, else ``batch-<id>-<part>.txt`` × ``fanout``.
+def idempotent_wire_sink(processed_dir: str, errors_dir: str, fanout: int = 1):
+    """foreachBatch writer of Job 1's tagged micro-batch
+    (streaming/jobs.processor_stream's ``tag``, ``value`` rows): lands
+    the processed values in ``processed_dir`` and the error values in
+    ``errors_dir`` as deterministically-named text files, in ONE Spark
+    write job. Processed rows land as ``batch-<id>.txt`` at the default
+    ``fanout=1``, else as ``batch-<id>-<part>.txt`` × ``fanout``; error
+    rows always as the one file ``batch-<id>.txt`` (the reference's
+    error topic is low-volume by design).
 
-    Every batch, ``fanout=1`` included, is HASH-partitioned on the
-    payload value into ``fanout`` parts. The shuffle is a stage
-    boundary: the stage that computes the micro-batch (in Job 1 the
-    scan, parse, stateful sequence and enrich) always runs one task per
-    input partition, and ``fanout`` only sets how many tasks write the
-    text. Coalescing to one partition instead would be a narrow
-    dependency, folding that whole upstream stage into the one writer
-    task. Hash partitioning is a pure function of content, so a replayed
-    batch reproduces the identical file set (round-robin repartition
-    would not), and each non-empty part lands under a name derived from
-    its partition index.
+    The batch is HASH-partitioned into ``fanout`` parts: a processed row
+    on its value, every error row on one shared null key, so all error
+    rows meet in one part. The shuffle is a stage boundary: the stage
+    that computes the micro-batch (in Job 1 the stateful sequence and
+    serialization) always runs one task per input partition, and
+    ``fanout`` only sets how many tasks write the text. Coalescing to
+    one partition instead would be a narrow dependency, folding that
+    whole upstream stage into the one writer task. Each part is sorted
+    by tag and value and written partitioned by tag, so a part holds
+    one file per tag. Hash partitioning and the sort are pure functions
+    of content, so a replayed batch reproduces byte-identical files
+    (round-robin repartition would not), and each non-empty part lands
+    under a name derived from its partition index.
 
     Replay safety (the foreachBatch idempotency contract from the Spark
     docs, keyed on ``batch_id``): the batch is written distributed to a
     scratch dir, then each part file is renamed over its final name — a
     same-filesystem atomic replace PER FILE. Atomicity is per-file, not
-    per-batch: at ``fanout=1`` a batch that died before its single
-    rename left nothing visible; at ``fanout > 1`` a crash mid-loop can
-    expose a PARTIAL batch to the downstream file source. Exactly-once
-    still holds: names and contents are pure functions of batch content
-    (hash partitioning on value), a replayed batch reproduces the same
-    row set (its input files and rolled-back state are the same) and so
-    re-lands byte-identical files, completing the set — and downstream
-    file sources, which track files by NAME, never double-read the
-    already-landed ones.
+    per-batch: a crash mid-loop can expose a PARTIAL batch to the
+    downstream file source (the processed files without the error file,
+    or some of ``fanout`` parts). Exactly-once still holds: names and
+    contents are pure functions of batch content, a replayed batch
+    reproduces the same row set (its input files and rolled-back state
+    are the same) and so re-lands byte-identical files, completing the
+    set — and downstream file sources, which track files by NAME, never
+    double-read the already-landed ones.
 
     DEPLOYMENT CONSTRAINT: the rename runs DRIVER-side with ``os``
-    calls, so the path must be a POSIX filesystem visible to both the
+    calls, so both paths must be on one POSIX filesystem visible to the
     driver and every executor — local mode (this repo's test/bench
     setup) or a shared mount (NFS). It is NOT valid for object-store
     paths (s3a://, gs://, …); a real cluster uses the Kafka hop
@@ -99,48 +108,51 @@ def idempotent_wire_sink(dirpath: str, fanout: int = 1):
     (executors wrote to non-shared storage) fails loudly instead of
     silently landing nothing.
     """
-    for prefix in ("s3://", "s3a://", "s3n://", "gs://", "abfs://",
-                   "abfss://", "wasb://", "hdfs://"):
-        if dirpath.startswith(prefix):
-            raise ValueError(
-                f"idempotent_wire_sink requires a driver-visible POSIX path, "
-                f"got {dirpath!r}; use the Kafka hop (io/kafka.py) on a cluster"
-            )
-    os.makedirs(dirpath, exist_ok=True)
+    for dirpath in (processed_dir, errors_dir):
+        for prefix in ("s3://", "s3a://", "s3n://", "gs://", "abfs://",
+                       "abfss://", "wasb://", "hdfs://"):
+            if dirpath.startswith(prefix):
+                raise ValueError(
+                    f"idempotent_wire_sink requires a driver-visible POSIX path, "
+                    f"got {dirpath!r}; use the Kafka hop (io/kafka.py) on a cluster"
+                )
+        os.makedirs(dirpath, exist_ok=True)
 
     from pyspark.sql import functions as F
 
+    is_processed = F.col("tag") == TAG_PROCESSED
+
     def write(df: DataFrame, batch_id: int) -> None:
-        scratch = os.path.join(dirpath, f"_scratch-{uuid.uuid4().hex}")
-        shaped = df.repartition(fanout, F.col("value"))
-        shaped.write.mode("overwrite").text(scratch)
+        # the file source skips `_`-prefixed names, so Job 2 never lists it
+        scratch = os.path.join(processed_dir, f"_scratch-{uuid.uuid4().hex}")
+        shaped = df.repartition(fanout, F.when(is_processed, F.col("value")))
+        shaped.sortWithinPartitions("tag", "value").write.partitionBy("tag").text(scratch)
         if not os.path.isdir(scratch):
             raise RuntimeError(
                 f"executors wrote {scratch!r} but the driver cannot see it: "
                 "idempotent_wire_sink needs a shared POSIX filesystem "
                 "(local mode or NFS); use the Kafka hop on a real cluster"
             )
-        parts = sorted(
-            f
-            for f in os.listdir(scratch)
-            if f.startswith("part-")
-            and os.path.getsize(os.path.join(scratch, f)) > 0
-        )
-        # empty batches/partitions write 0-byte parts — don't land them.
-        # Spark names task outputs part-NNNNN-...; NNNNN is the partition
-        # index, which is content-deterministic under hash partitioning,
-        # so a replayed batch reproduces the identical final-name set.
-        for p in parts:
-            idx = int(p.split("-")[1])
-            final = (
-                f"batch-{batch_id:08d}.txt"
-                if fanout == 1
-                else f"batch-{batch_id:08d}-{idx:04d}.txt"
-            )
-            os.replace(os.path.join(scratch, p), os.path.join(dirpath, final))
-        for f in os.listdir(scratch):
-            os.remove(os.path.join(scratch, f))
-        os.rmdir(scratch)
+        for tag, dirpath in ((TAG_PROCESSED, processed_dir), (TAG_ERROR, errors_dir)):
+            tag_dir = os.path.join(scratch, f"tag={tag}")
+            if not os.path.isdir(tag_dir):
+                continue
+            # Spark names task outputs part-NNNNN-...; NNNNN is the
+            # partition index, which is content-deterministic under hash
+            # partitioning, so a replayed batch reproduces the identical
+            # final-name set. Empty parts are not landed.
+            for p in sorted(os.listdir(tag_dir)):
+                src = os.path.join(tag_dir, p)
+                if not p.startswith("part-") or os.path.getsize(src) == 0:
+                    continue
+                idx = int(p.split("-")[1])
+                final = (
+                    f"batch-{batch_id:08d}-{idx:04d}.txt"
+                    if tag == TAG_PROCESSED and fanout > 1
+                    else f"batch-{batch_id:08d}.txt"
+                )
+                os.replace(src, os.path.join(dirpath, final))
+        shutil.rmtree(scratch)
 
     return write
 
@@ -156,17 +168,17 @@ def start_processor_job(
     available_now: bool = False,
     wire_fanout: int = 1,
 ):
-    """Job 1 over the file wire: one checkpointed dual-sink query.
+    """Job 1 over the file wire: one checkpointed query whose sink writes
+    both wires in one job.
 
     The micro-batch is computed at full parallelism whatever the
     fanout; ``wire_fanout`` > 1 only splits the processed-side text
     write into that many files (see idempotent_wire_sink). Errors stay
-    single-file (the reference's error topic is low-volume by design).
+    single-file.
     """
     return start_processor_query(
         read_jsonl_stream(spark, source_dir, max_files_per_trigger),
-        idempotent_wire_sink(processed_dir, fanout=wire_fanout),
-        idempotent_wire_sink(errors_dir),
+        idempotent_wire_sink(processed_dir, errors_dir, fanout=wire_fanout),
         checkpoint_dir,
         "processor-job",
         trigger_interval=trigger_interval,

@@ -58,33 +58,35 @@ def enriched_data_json(data: Column, original_timestamp: Column) -> Column:
 def enrich(
     valid_df: DataFrame,
     now: Column | None = None,
-    sequence: Column | None = None,
     order_by: list[str] | None = None,
 ) -> DataFrame:
-    """Build ProcessedEvents from valid InputEvents.
+    """Build ProcessedEvents from valid InputEvents, numbering each key's
+    events with a batch ``row_number`` over ``order_by`` (default: input
+    order via a monotonically increasing id — only deterministic
+    per-partition, so tests pass explicit order columns). The streaming
+    counter (streaming/sequence.py) feeds :func:`enriched_fields`
+    directly.
 
     ``now`` injects a deterministic clock (defaults to processing time,
-    matching EventProcessorJob.kt:113,120). ``sequence`` lets the
-    streaming stateful operator supply its own counter; otherwise a
-    batch ``row_number`` over ``order_by`` (default: input order via
-    a monotonically increasing id — only deterministic per-partition,
-    so tests pass explicit order columns).
+    matching EventProcessorJob.kt:113,120).
     """
     if now is None:
         now = F.current_timestamp()
-    if sequence is None:
-        if order_by is None:
-            df = valid_df.withColumn("_arrival", F.monotonically_increasing_id())
-            order_cols = [F.col("_arrival")]
-        else:
-            df = valid_df
-            order_cols = [F.col(c) for c in order_by]
-        sequence = F.row_number().over(Window.partitionBy("id").orderBy(*order_cols))
+    if order_by is None:
+        df = valid_df.withColumn("_arrival", F.monotonically_increasing_id())
+        order_cols = [F.col("_arrival")]
     else:
         df = valid_df
+        order_cols = [F.col(c) for c in order_by]
+    sequence = F.row_number().over(Window.partitionBy("id").orderBy(*order_cols))
+    return df.select(*enriched_fields(now, sequence))
 
+
+def enriched_fields(now: Column, sequence: Column) -> list[Column]:
+    """The ProcessedEvent fields (Events.kt:10-17) of a valid event's
+    ``id``, ``type``, ``timestamp`` and ``data`` columns."""
     now_ms = F.unix_millis(now)
-    out = df.select(
+    return [
         F.col("id").alias("originalId"),
         F.col("type").alias("eventType"),
         iso_instant(now).alias("processedAt"),
@@ -94,5 +96,4 @@ def enrich(
         .alias("processingDelay"),
         enriched_data_json(F.col("data"), F.col("timestamp")).alias("enrichedData"),
         sequence.cast("int").alias("sequence"),
-    )
-    return out
+    ]

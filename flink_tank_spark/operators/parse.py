@@ -19,9 +19,12 @@ Jackson contract exactly (verified empirically):
   (Events.kt:4-7, SURVEY §1.4 "lenient-with-defaults");
 - numeric ``id`` → coerced to string, like Jackson.
 
-Both output branches share the single parsed projection, so a batch (or
-one ``foreachBatch`` micro-batch) reads and parses the source exactly
-once — same single-pass behavior as the reference's one ProcessFunction.
+:func:`parse_tagged` is that projection: one row per input, tagged
+``error``, carrying the valid-row fields or the raw message.
+:func:`parse_and_route` filters it into the two branches of the batch
+topology; Job 1's streaming query (streaming/jobs.py) keeps the tagged
+rows in one linear plan instead, so each micro-batch scans and parses
+the source once, as the reference's one ProcessFunction does.
 """
 
 from __future__ import annotations
@@ -65,26 +68,17 @@ def parse_events(
     return raw_df.withColumn("_parsed", parsed)
 
 
-def parse_and_route(
-    raw_df: DataFrame,
-    value_col: str = "value",
-    now: Column | None = None,
-    variant_data: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Route raw strings into (valid_df, error_df).
+def parse_tagged(
+    raw_df: DataFrame, value_col: str = "value", variant_data: bool = False
+) -> DataFrame:
+    """One row per input row, parsed once and tagged.
 
-    valid_df columns: id, type, timestamp (epoch ms), data — the open
-    map as a raw JSON object string, or as VariantType when
-    ``variant_data=True`` (default ``{}`` either way) — Kotlin defaults
-    applied.
-    error_df columns: rawMessage, errorType, errorMessage, timestamp —
-    the ErrorEvent shape (Events.kt:19-24).
-
-    ``now`` injects a deterministic clock for tests/oracles; defaults to
-    processing time like the reference (EventProcessorJob.kt:92).
+    Columns: ``error`` (boolean); ``id``, ``type``, ``timestamp``,
+    ``data`` with the Kotlin defaults applied, null on error rows; the
+    source's other columns (e.g. the ``arrival`` offset the stateful
+    sequence orders by); ``raw``, the input message on error rows and
+    null on valid ones, so valid rows do not carry it further.
     """
-    if now is None:
-        now = F.current_timestamp()
     p = parse_events(raw_df, value_col, variant_data)
 
     # from_json leaves the corrupt marker unset for empty input and the
@@ -96,28 +90,62 @@ def parse_and_route(
         | F.col(value_col).isNull()
         | F.trim(F.col(value_col)).isin("", "null")
     )
-
-    # Source metadata columns (e.g. the `arrival` offset) pass through the
-    # valid branch — the stateful sequence operator needs the order.
-    passthrough = [c for c in raw_df.columns if c != value_col]
     empty_map = (
         F.parse_json(F.lit("{}")) if variant_data else F.lit("{}")
     )
-    valid = p.filter(~is_error).select(
-        F.coalesce(F.col("_parsed.id"), F.lit("")).alias("id"),
-        F.coalesce(F.col("_parsed.type"), F.lit("")).alias("type"),
-        F.coalesce(F.col("_parsed.timestamp"), F.lit(0).cast("long")).alias("timestamp"),
-        F.coalesce(F.col("_parsed.data"), empty_map).alias("data"),
+    fields = {
+        "id": F.coalesce(F.col("_parsed.id"), F.lit("")),
+        "type": F.coalesce(F.col("_parsed.type"), F.lit("")),
+        "timestamp": F.coalesce(F.col("_parsed.timestamp"), F.lit(0).cast("long")),
+        "data": F.coalesce(F.col("_parsed.data"), empty_map),
+    }
+    passthrough = [c for c in raw_df.columns if c != value_col]
+    return p.select(
+        is_error.alias("error"),
+        *[F.when(~is_error, c).alias(name) for name, c in fields.items()],
         *[F.col(c) for c in passthrough],
+        F.when(is_error, F.col(value_col)).alias("raw"),
     )
 
-    errors = p.filter(is_error).select(
-        F.col(value_col).alias("rawMessage"),
+
+def error_fields(raw: Column, now: Column) -> list[Column]:
+    """The ErrorEvent fields (Events.kt:19-24) of a malformed ``raw``
+    message, stamped ``now``."""
+    return [
+        raw.alias("rawMessage"),
         F.lit(PARSE_ERROR).alias("errorType"),
         F.concat(
             F.lit("Failed to parse event JSON: "),
-            F.substring(F.col(value_col), 1, 256),
+            F.substring(raw, 1, 256),
         ).alias("errorMessage"),
         iso_instant(now).alias("timestamp"),
+    ]
+
+
+def parse_and_route(
+    raw_df: DataFrame,
+    value_col: str = "value",
+    now: Column | None = None,
+    variant_data: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """Route raw strings into (valid_df, error_df).
+
+    valid_df columns: id, type, timestamp (epoch ms), data — the open
+    map as a raw JSON object string, or as VariantType when
+    ``variant_data=True`` (default ``{}`` either way) — Kotlin defaults
+    applied, then the source's other columns.
+    error_df columns: rawMessage, errorType, errorMessage, timestamp —
+    the ErrorEvent shape (Events.kt:19-24).
+
+    ``now`` injects a deterministic clock for tests/oracles; defaults to
+    processing time like the reference (EventProcessorJob.kt:92).
+    """
+    if now is None:
+        now = F.current_timestamp()
+    tagged = parse_tagged(raw_df, value_col, variant_data)
+    passthrough = [c for c in raw_df.columns if c != value_col]
+    valid = tagged.filter(~F.col("error")).select(
+        "id", "type", "timestamp", "data", *passthrough
     )
+    errors = tagged.filter(F.col("error")).select(*error_fields(F.col("raw"), now))
     return valid, errors

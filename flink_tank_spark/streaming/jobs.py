@@ -8,8 +8,11 @@ batch pytest golden tests and in the streaming mains.
 
 Job 1 (Event Processor, EventProcessorJob.kt:156-177):
     raw strings → parse/route → per-key sequence + enrich
-    → (processed JSON, error JSON), run as one streaming query by
-    :func:`start_processor_query` whatever the transport
+    → (processed JSON, error JSON). The batch form
+    (:func:`get_output_streams`) returns the two outputs as frames; the
+    streaming form (:func:`processor_stream`, run by
+    :func:`start_processor_query` whatever the transport) is one linear
+    plan of tagged rows.
 
 Job 2 (Aggregation, AggregationJob.kt:208-275):
     processed JSON → parse (failures silently dropped — the reference's
@@ -23,108 +26,116 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from flink_tank_spark.operators.enrich import enrich
-from flink_tank_spark.operators.parse import parse_and_route
+from flink_tank_spark.operators.enrich import enrich, enriched_fields
+from flink_tank_spark.operators.parse import error_fields, parse_and_route, parse_tagged
 from flink_tank_spark.schemas import PROCESSED_EVENT_SCHEMA
+
+# the ``tag`` of Job 1's two outputs in its streaming form
+TAG_PROCESSED = "ok"
+TAG_ERROR = "err"
 
 
 def get_output_streams(
     raw_df: DataFrame,
     now: Column | None = None,
     order_by: list[str] | None = None,
-    streaming: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Job 1 topology: raw strings → (ProcessedEvents, ErrorEvents).
-
-    Batch mode assigns sequences with ``row_number`` over ``order_by``;
-    streaming mode threads the stateful per-key counter
-    (streaming/sequence.py) through the same enrichment projection.
+    """Job 1's batch topology: raw strings → (ProcessedEvents,
+    ErrorEvents), sequences assigned by ``row_number`` over ``order_by``.
     """
     valid, errors = parse_and_route(raw_df, now=now)
-    if streaming:
-        from flink_tank_spark.streaming.sequence import with_sequence_stream
-
-        if "arrival" not in valid.columns:
-            raise ValueError("streaming mode requires an 'arrival' order column")
-        sequenced = with_sequence_stream(valid.select("id", "type", "timestamp", "data", "arrival"))
-        processed = enrich(sequenced, now=now, sequence=F.col("sequence"))
-    else:
-        processed = enrich(valid, now=now, order_by=order_by)
-    return processed, errors
+    return enrich(valid, now=now, order_by=order_by), errors
 
 
-def serialize_processed(processed: DataFrame) -> DataFrame:
-    """M3: ProcessedEvent → one JSON string column ``value``.
+def _processed_json() -> Column:
+    """M3: a ProcessedEvent's columns → one JSON string.
 
     ``enrichedData`` is a raw JSON object string; ``parse_json`` lifts it
     to a VARIANT so ``to_json`` embeds it as a nested OBJECT (with its
     original value types), not a quoted string — byte-compatible with the
     reference's Jackson output (EventProcessorJob.kt:147-151).
     """
-    return processed.select(
-        F.to_json(
-            F.struct(
-                "originalId",
-                "eventType",
-                "processedAt",
-                "processingDelay",
-                F.parse_json(F.col("enrichedData")).alias("enrichedData"),
-                "sequence",
-            )
-        ).alias("value")
+    return F.to_json(
+        F.struct(
+            "originalId",
+            "eventType",
+            "processedAt",
+            "processingDelay",
+            F.parse_json(F.col("enrichedData")).alias("enrichedData"),
+            "sequence",
+        )
     )
 
 
+def _error_json() -> Column:
+    return F.to_json(F.struct("rawMessage", "errorType", "errorMessage", "timestamp"))
+
+
+def serialize_processed(processed: DataFrame) -> DataFrame:
+    return processed.select(_processed_json().alias("value"))
+
+
 def serialize_errors(errors: DataFrame) -> DataFrame:
-    return errors.select(
-        F.to_json(F.struct("rawMessage", "errorType", "errorMessage", "timestamp")).alias("value")
+    return errors.select(_error_json().alias("value"))
+
+
+def processor_stream(raw: DataFrame, now: Column | None = None) -> DataFrame:
+    """Job 1's streaming topology as one linear plan: raw strings with an
+    ``arrival`` order column → (``tag``, ``value``) rows, ``value`` the
+    JSON of a ProcessedEvent (tag :data:`TAG_PROCESSED`) or an
+    ErrorEvent (tag :data:`TAG_ERROR`).
+
+    Each row is parsed once into a tagged row (operators/parse.py), one
+    stateful operator sequences the valid rows and passes the error rows
+    through (streaming/sequence.py), and one projection serializes each
+    row by its tag — the shape of the reference's one ProcessFunction
+    with a side output (EventProcessorJob.kt:79-128). The source is
+    scanned once per micro-batch.
+    """
+    if "arrival" not in raw.columns:
+        raise ValueError("Job 1's streaming form requires an 'arrival' order column")
+    if now is None:
+        now = F.current_timestamp()
+    from flink_tank_spark.streaming.sequence import with_sequence_stream
+
+    fields = with_sequence_stream(parse_tagged(raw)).select(
+        "error",
+        *enriched_fields(now, F.col("sequence")),
+        *error_fields(F.col("raw"), now),
+    )
+    error = F.col("error")
+    return fields.select(
+        F.when(error, F.lit(TAG_ERROR)).otherwise(F.lit(TAG_PROCESSED)).alias("tag"),
+        F.when(error, _error_json()).otherwise(_processed_json()).alias("value"),
     )
 
 
 def start_processor_query(
     raw: DataFrame,
-    processed_sink,
-    errors_sink,
+    sink,
     checkpoint_dir: str,
     query_name: str,
     trigger_interval: str | None = None,
     available_now: bool = False,
 ):
-    """Job 1 as ONE checkpointed streaming query feeding both sinks —
+    """Job 1 as ONE checkpointed streaming query writing both outputs —
     the analogue of the reference's single job writing the output and
     error topics (EventProcessorJob.kt:65-74). Every transport runs this
-    shape; only the sinks differ (io/kafka.kafka_batch_sink,
-    jobs/pipeline.idempotent_wire_sink, any ``fn(df, batch_id)``
-    writer of a ``value`` column).
+    shape; only the sink differs.
 
-    Both outputs travel as one tagged union (columns: value, tag), so
-    the stateful sequence stays inside the streaming query (its state
-    persists across micro-batches), the source's offsets are planned
-    ONCE per micro-batch, and both writes commit under one checkpoint.
-    The union's valid and error branches still SCAN the source once
-    each, so progress reports ``numInputRows`` = 3,000 for a 1,500-event
-    backlog; both scans read the same planned offsets, so only the read
-    cost doubles. Each batch is persisted so the two sinks don't
-    recompute the shared topology.
+    ``sink`` is a ``foreachBatch`` writer ``fn(df, batch_id)`` of
+    :func:`processor_stream`'s (``tag``, ``value``) rows that lands
+    both outputs in one write: io/kafka.kafka_batch_sink (a topic per
+    tag) or jobs/pipeline.idempotent_wire_sink (a directory per tag).
+    The micro-batch is neither persisted nor recomputed: the sink's one
+    write job runs the scan, parse, stateful sequence and serialization
+    once.
 
     ``available_now`` drains the source then stops; otherwise
     ``trigger_interval`` sets the micro-batch (= checkpoint) cadence.
     """
-    processed, errors = get_output_streams(raw, streaming=True)
-    tagged = serialize_processed(processed).withColumn("tag", F.lit("ok")).unionByName(
-        serialize_errors(errors).withColumn("tag", F.lit("err"))
-    )
-
-    def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            processed_sink(batch_df.filter(F.col("tag") == "ok").select("value"), batch_id)
-            errors_sink(batch_df.filter(F.col("tag") == "err").select("value"), batch_id)
-        finally:
-            batch_df.unpersist()
-
     writer = (
-        tagged.writeStream.foreachBatch(write_both)
+        processor_stream(raw).writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)
         .queryName(query_name)
     )

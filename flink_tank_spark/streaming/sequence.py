@@ -40,14 +40,23 @@ key. That pays while a batch holds many more distinct keys than
 - Memory. A call holds its bucket's share of the micro-batch at once,
   about batch ÷ ``N_BUCKETS`` rows plus a sorted copy, where a per-key
   call took one Arrow chunk at a time. The largest batch is the first
-  on a fresh checkpoint: the Kafka source starts at ``earliest`` with
-  no ``maxOffsetsPerTrigger`` (io/kafka.py), so it reads the whole
-  retained topic, about 1.2 M events at the reference's 2 events/s and
-  7-day retention. Such a batch over the reference's 50 keys took
-  31.8 and 45.7 s of add-batch against 26.5 and 33.5 s with per-key
-  calls (two runs each, 3 cores), and peak Python worker memory rose
-  from 129 to 165 MB: with 50 keys there are no calls to save, and a
-  call takes in its whole bucket before it returns a row.
+  on a fresh checkpoint, where the Kafka source starts at ``earliest``.
+  Unbounded, it read the whole retained topic, about 1.2 M events at
+  the reference's 2 events/s and 7-day retention; such a batch over the
+  reference's 50 keys took 31.8 and 45.7 s of add-batch against 26.5
+  and 33.5 s with per-key calls (two runs each, 3 cores), and peak
+  Python worker memory rose from 129 to 165 MB: with 50 keys there are
+  no calls to save, and a call takes in its whole bucket before it
+  returns a row. Job 1 now caps each Kafka batch at
+  ``jobs/event_processor.MAX_OFFSETS_PER_TRIGGER`` records.
+
+Job 1 runs its error rows through the same operator, so the source is
+scanned once per micro-batch (streaming/jobs.py). An error row has no
+key: it is bucketed by a hash of its raw message, which spreads error
+rows over the buckets instead of piling them into one, and it passes
+through with a null sequence. A call neither reads nor writes state for
+its error rows, so a bucket that holds only error rows leaves its state
+as it was.
 
 ``N_BUCKETS`` and the hash (``key_bucket``, which Job 2's heartbeat
 shares) are part of both jobs' checkpoint format, because the bucket id
@@ -69,6 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     LongType,
     StringType,
     StructField,
@@ -78,9 +88,9 @@ from pyspark.sql.types import (
 N_BUCKETS = 64
 
 
-def key_bucket(key_col: str) -> Column:
-    """The state key of both stateful jobs: ``key_col``'s hash bucket."""
-    return F.pmod(F.xxhash64(key_col), F.lit(N_BUCKETS))
+def key_bucket(key: str | Column) -> Column:
+    """The state key of both stateful jobs: ``key``'s hash bucket."""
+    return F.pmod(F.xxhash64(key), F.lit(N_BUCKETS))
 
 
 # state per bucket: the bucket's keys and each key's latest sequence
@@ -91,13 +101,17 @@ _STATE_SCHEMA = StructType(
     ]
 )
 
+# operators/parse.parse_tagged's columns (over a source with an
+# `arrival` column) plus the sequence, null on error rows
 SEQUENCED_SCHEMA = StructType(
     [
+        StructField("error", BooleanType()),
         StructField("id", StringType()),
         StructField("type", StringType()),
         StructField("timestamp", LongType()),
         StructField("data", StringType()),
         StructField("arrival", LongType()),
+        StructField("raw", StringType()),
         StructField("sequence", LongType()),
     ]
 )
@@ -118,28 +132,41 @@ def _assign_sequences(
     # `arrival` column (Kafka offset / file line number) — the same
     # per-partition FIFO order Flink relies on for per-key sequencing.
     pdf = pdf.sort_values("arrival", kind="stable", ignore_index=True)
-    ids, latest = state.get if state.exists else ([], [])
-    stored = dict(zip(ids, latest))
-    # One pass in arrival order both numbers the rows and leaves each
-    # key at its latest sequence. A plain loop: pandas' map + groupby
-    # cost about 2 ms a call before the first row, this about 0.5 ms.
-    sequence = []
-    for k in pdf["id"].tolist():
-        stored[k] = stored.get(k, 0) + 1
-        sequence.append(stored[k])
-    pdf["sequence"] = sequence
-    state.update((list(stored), list(stored.values())))
+    errors = pdf["error"].tolist()
+    sequence = [None] * len(errors)
+    if not all(errors):
+        ids, latest = state.get if state.exists else ([], [])
+        stored = dict(zip(ids, latest))
+        # One pass in arrival order both numbers the valid rows and
+        # leaves each key at its latest sequence. A plain loop: pandas'
+        # map + groupby cost about 2 ms a call before the first row, this
+        # about 0.5 ms.
+        for i, (k, error) in enumerate(zip(pdf["id"].tolist(), errors)):
+            if not error:
+                stored[k] = stored.get(k, 0) + 1
+                sequence[i] = stored[k]
+        state.update((list(stored), list(stored.values())))
+    pdf["sequence"] = pd.array(sequence, dtype="Int64")
     yield pdf[SEQUENCED_SCHEMA.fieldNames()]
 
 
-def with_sequence_stream(valid_df: DataFrame) -> DataFrame:
-    """Attach per-key sequence to a STREAMING valid-events DataFrame.
+def bucketed(tagged: DataFrame) -> DataFrame:
+    """Add the ``bucket`` column to parse_tagged rows: the key's bucket
+    for a valid row, the raw message's for an error row."""
+    key = F.when(F.col("error"), F.col("raw")).otherwise(F.col("id"))
+    return tagged.withColumn("bucket", key_bucket(key))
+
+
+def with_sequence_stream(tagged: DataFrame) -> DataFrame:
+    """Attach per-key sequences to a STREAMING frame of
+    operators/parse.parse_tagged rows; error rows pass through with a
+    null sequence.
 
     Input must carry an ``arrival`` long column (Kafka offset or
     equivalent monotone per-partition id) defining within-batch order.
     """
     return (
-        valid_df.withColumn("bucket", key_bucket("id"))
+        bucketed(tagged)
         .groupBy("bucket")
         .applyInPandasWithState(
             _assign_sequences,

@@ -88,21 +88,18 @@ def main() -> int:
         from flink_tank_spark.io.kafka import read_jsonl_stream
         from flink_tank_spark.streaming.jobs import start_processor_query
 
-        ok_dir, err_dir, chk2 = (
-            os.path.join(work, d) for d in ("ok", "err", "chk2")
-        )
+        from flink_tank_spark.streaming.jobs import TAG_PROCESSED
 
-        def parquet_sink(path):
-            def write(df, batch_id):
-                df.write.mode("append").parquet(path)
+        out_dir, chk2 = (os.path.join(work, d) for d in ("job1-out", "chk2"))
+        ok_dir = os.path.join(out_dir, f"tag={TAG_PROCESSED}")
 
-            return write
+        def parquet_sink(df, batch_id):
+            df.write.mode("append").partitionBy("tag").parquet(out_dir)
 
         t0 = time.perf_counter()
         q = start_processor_query(
             read_jsonl_stream(spark, src),
-            parquet_sink(ok_dir),
-            parquet_sink(err_dir),
+            parquet_sink,
             chk2,
             "bench-processor",
             available_now=True,

@@ -35,7 +35,7 @@ from flink_tank_spark.jobs.pipeline import (
     start_aggregation_job,
     start_processor_job,
 )
-from flink_tank_spark.streaming.jobs import get_output_streams
+from flink_tank_spark.streaming.jobs import TAG_ERROR, TAG_PROCESSED, get_output_streams
 
 _ARRIVAL = 0
 
@@ -240,6 +240,11 @@ def test_two_job_chain_survives_kill_and_restart(spark, tmp_path):
         assert m["windowStart"] < m["windowEnd"]
 
 
+def _processed(df):
+    """Tag a frame of ``value`` strings as Job 1's processed output."""
+    return df.withColumn("tag", F.lit(TAG_PROCESSED))
+
+
 def test_idempotent_wire_sink_replay_overwrites_same_file(spark, tmp_path):
     """The foreachBatch idempotency contract: replaying a batch id must
     replace its file (same name, same row set), never mint a new one —
@@ -248,20 +253,20 @@ def test_idempotent_wire_sink_replay_overwrites_same_file(spark, tmp_path):
     from flink_tank_spark.jobs.pipeline import idempotent_wire_sink
 
     out = str(tmp_path / "wire")
-    sink = idempotent_wire_sink(out)
-    df1 = spark.createDataFrame([("a",), ("b",)], "value string")
+    sink = idempotent_wire_sink(out, str(tmp_path / "errors"))
+    df1 = _processed(spark.createDataFrame([("a",), ("b",)], "value string"))
     sink(df1, 3)
     # replay of batch 3 (e.g. after a crash before the checkpoint
     # commit) with the same rows in a different partitioning
     sink(df1.repartition(4), 3)
-    sink(spark.createDataFrame([("c",)], "value string"), 4)
+    sink(_processed(spark.createDataFrame([("c",)], "value string")), 4)
 
     files = sorted(f for f in os.listdir(out) if not f.startswith(("_", ".")))
     assert files == ["batch-00000003.txt", "batch-00000004.txt"]
     with open(os.path.join(out, files[0])) as f:
         assert sorted(f.read().split()) == ["a", "b"]
     # empty batch: no file, no error
-    sink(spark.createDataFrame([], "value string"), 5)
+    sink(_processed(spark.createDataFrame([], "value string")), 5)
     files = sorted(f for f in os.listdir(out) if not f.startswith(("_", ".")))
     assert files == ["batch-00000003.txt", "batch-00000004.txt"]
 
@@ -275,10 +280,10 @@ def test_wire_sink_fanout_deterministic_names(spark, tmp_path):
     from flink_tank_spark.jobs.pipeline import idempotent_wire_sink
 
     rows = [(f"payload-{i}",) for i in range(500)]
-    df = spark.createDataFrame(rows, ["value"])
+    df = _processed(spark.createDataFrame(rows, ["value"]))
 
     out1 = str(tmp_path / "w1")
-    sink = idempotent_wire_sink(out1, fanout=4)
+    sink = idempotent_wire_sink(out1, str(tmp_path / "e1"), fanout=4)
     sink(df, 7)
     names1 = sorted(os.listdir(out1))
     contents1 = {n: sorted(open(os.path.join(out1, n)).read().splitlines())
@@ -295,7 +300,7 @@ def test_wire_sink_fanout_deterministic_names(spark, tmp_path):
     # and a different-layout source producing the same ROWS lands the
     # same file set (hash partitioning is content-pure, not layout-pure)
     out2 = str(tmp_path / "w2")
-    sink2 = idempotent_wire_sink(out2, fanout=4)
+    sink2 = idempotent_wire_sink(out2, str(tmp_path / "e2"), fanout=4)
     sink2(df.repartition(13), 7)
     contents3 = {n: sorted(open(os.path.join(out2, n)).read().splitlines())
                  for n in sorted(os.listdir(out2))}
@@ -303,6 +308,43 @@ def test_wire_sink_fanout_deterministic_names(spark, tmp_path):
     # every row landed exactly once across the fanout
     all_rows = sorted(sum((c for c in contents1.values()), []))
     assert all_rows == sorted(r[0] for r in rows)
+
+
+def test_wire_sink_fanout_one_error_file_and_identical_replay(spark, tmp_path):
+    """One write lands both wires: at ``fanout=4`` the processed rows
+    fan out while every error row lands in the one file
+    ``batch-<id>.txt``, and a replay of the batch from another layout
+    re-lands byte-identical files under the same names."""
+    from flink_tank_spark.jobs.pipeline import idempotent_wire_sink
+
+    rows = [(f"payload-{i}", TAG_PROCESSED) for i in range(400)] + [
+        (f"{{broken {i}", TAG_ERROR) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "value string, tag string")
+
+    def landed(root):
+        out = {}
+        for wire in ("processed", "errors"):
+            d = os.path.join(root, wire)
+            for n in sorted(os.listdir(d)):
+                with open(os.path.join(d, n), "rb") as f:
+                    out[(wire, n)] = f.read()
+        return out
+
+    root = str(tmp_path / "w")
+    sink = idempotent_wire_sink(f"{root}/processed", f"{root}/errors", fanout=4)
+    sink(df, 7)
+    first = landed(root)
+    assert [n for w, n in first if w == "errors"] == ["batch-00000007.txt"]
+    processed = [n for w, n in first if w == "processed"]
+    assert 1 < len(processed) <= 4
+    assert all(n.startswith("batch-00000007-") for n in processed)
+    assert sorted(first[("errors", "batch-00000007.txt")].decode().splitlines()) == sorted(
+        v for v, t in rows if t == TAG_ERROR
+    )
+    # replay of the same batch, its rows arriving in another partitioning
+    sink(df.repartition(13), 7)
+    assert landed(root) == first
 
 
 def test_wire_sink_keeps_upstream_parallelism(spark, tmp_path):
@@ -314,11 +356,11 @@ def test_wire_sink_keeps_upstream_parallelism(spark, tmp_path):
     from flink_tank_spark.jobs.pipeline import idempotent_wire_sink
 
     out = str(tmp_path / "wire")
-    sink = idempotent_wire_sink(out)
+    sink = idempotent_wire_sink(out, str(tmp_path / "errors"))
     n = 3_000
-    df = spark.range(0, n, 1, numPartitions=3).select(
+    df = _processed(spark.range(0, n, 1, numPartitions=3).select(
         F.col("id").cast("string").alias("value")
-    )
+    ))
     sc = spark.sparkContext
     group = f"wire-sink-parallelism-{tmp_path.name}"
     sc.setJobGroup(group, "idempotent_wire_sink parallelism")

@@ -52,3 +52,46 @@ def test_manifest_arguments_parse(path, monkeypatch):
 
     with pytest.raises(SessionRequested):
         module.main([str(a) for a in app["spec"]["arguments"]])
+
+
+class _RecordingReader:
+    """A ``spark.readStream`` stand-in that records its options."""
+
+    def __init__(self):
+        self.options: dict[str, str] = {}
+
+    def format(self, source):
+        self.source = source
+        return self
+
+    def option(self, key, value):
+        self.options[key] = value
+        return self
+
+    def load(self):
+        return self
+
+    def selectExpr(self, *exprs):
+        return self
+
+
+def test_event_processor_caps_kafka_batches(monkeypatch):
+    """Job 1's Kafka read carries maxOffsetsPerTrigger, so a fresh
+    checkpoint's first batch is not the whole retained topic."""
+    from flink_tank_spark.jobs import event_processor
+
+    reader = _RecordingReader()
+
+    class _Spark:
+        readStream = reader
+
+    monkeypatch.setattr(event_processor, "get_spark", lambda *a, **k: _Spark())
+
+    def _no_query(*args, **kwargs):
+        raise SessionRequested
+
+    monkeypatch.setattr(event_processor, "start_processor_query", _no_query)
+    with pytest.raises(SessionRequested):
+        event_processor.main(["--checkpoint-dir", "/unused"])
+    assert reader.source == "kafka"
+    assert reader.options["maxOffsetsPerTrigger"] == str(event_processor.MAX_OFFSETS_PER_TRIGGER)

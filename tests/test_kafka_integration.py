@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from flink_tank_spark.io.kafka import kafka_available, kafka_batch_sink, read_kafka_stream
 from flink_tank_spark.producer import generate_messages
-from flink_tank_spark.streaming.jobs import start_processor_query
+from flink_tank_spark.streaming.jobs import TAG_ERROR, TAG_PROCESSED, start_processor_query
 
 BOOTSTRAP = os.environ.get("SPARK_GRAFT_KAFKA_BOOTSTRAP")
 
@@ -53,11 +53,10 @@ def test_job1_kafka_to_kafka_end_to_end(spark, tmp_path):
     )
 
     # the deployed shape (jobs/event_processor.py): one query, one
-    # checkpoint, both topics written per micro-batch
+    # checkpoint, both topics written in one write per micro-batch
     q = start_processor_query(
         read_kafka_stream(spark, BOOTSTRAP, in_topic),
-        kafka_batch_sink(BOOTSTRAP, out_topic),
-        kafka_batch_sink(BOOTSTRAP, err_topic),
+        kafka_batch_sink(BOOTSTRAP, {TAG_PROCESSED: out_topic, TAG_ERROR: err_topic}),
         str(tmp_path / "chk"),
         f"e2e-processor-{run}",
         available_now=True,

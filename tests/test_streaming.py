@@ -16,8 +16,9 @@ import random
 from pyspark.sql import functions as F
 
 from flink_tank_spark.io.kafka import read_jsonl_stream
-from flink_tank_spark.streaming.jobs import get_output_streams, serialize_processed
-from flink_tank_spark.streaming.sequence import N_BUCKETS
+from flink_tank_spark.jobs.pipeline import start_processor_job
+from flink_tank_spark.streaming.jobs import TAG_ERROR, get_output_streams
+from flink_tank_spark.streaming.sequence import N_BUCKETS, key_bucket
 
 
 _ARRIVAL = 0
@@ -41,17 +42,7 @@ def test_sequence_state_survives_micro_batches(spark, tmp_path):
 
     def run_available(msgs, batch_name):
         _write_batch(src, batch_name, msgs)
-        raw = read_jsonl_stream(spark, src)
-        processed, _ = get_output_streams(raw, streaming=True)
-        q = (
-            serialize_processed(processed)
-            .writeStream.format("text")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        _drain_sequenced(spark, src, ckpt, out_dir)
 
     # micro-batch 1: user-1 ×2, user-2 ×1
     run_available(
@@ -87,17 +78,12 @@ def test_sequence_state_survives_micro_batches(spark, tmp_path):
     assert all(r["processingDelay"] >= 0 for r in rows)
 
 
-def _drain_sequenced(spark, src: str, ckpt: str, out_dir: str):
-    """One availableNow run of the streaming sequence over ``src`` into
-    JSON lines under ``out_dir``; returns the finished query."""
-    processed, _ = get_output_streams(read_jsonl_stream(spark, src), streaming=True)
-    q = (
-        serialize_processed(processed)
-        .writeStream.format("text")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+def _drain_sequenced(spark, src: str, ckpt: str, out_dir: str, err_dir: str | None = None):
+    """One availableNow run of Job 1 over ``src``: processed JSON lines
+    under ``out_dir``, errors under ``err_dir`` (default: beside
+    ``out_dir``); returns the finished query."""
+    q = start_processor_job(
+        spark, src, out_dir, err_dir or f"{out_dir}-errors", ckpt, available_now=True
     )
     q.awaitTermination(120)
     return q
@@ -172,20 +158,10 @@ def test_sequence_buckets_share_state_across_restarts(spark, tmp_path):
 
 def test_error_stream_end_to_end(spark, tmp_path):
     src = str(tmp_path / "in")
+    err_dir = str(tmp_path / "err")
     _write_batch(src, "b1", ["{broken", '{"id":"u","type":"t","timestamp":1,"data":{}}'])
-    raw = read_jsonl_stream(spark, src)
-    _, errors = get_output_streams(raw, streaming=True)
-    from flink_tank_spark.streaming.jobs import serialize_errors
-
-    q = (
-        serialize_errors(errors)
-        .writeStream.format("memory")
-        .queryName("err_sink")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    vals = [json.loads(r.value) for r in spark.sql("SELECT * FROM err_sink").collect()]
+    _drain_sequenced(spark, src, str(tmp_path / "ckpt"), str(tmp_path / "out"), err_dir)
+    vals = [json.loads(r.value) for r in spark.read.text(err_dir).collect()]
     assert len(vals) == 1
     assert vals[0]["rawMessage"] == "{broken"
     assert vals[0]["errorType"] == "PARSE_ERROR"
@@ -296,9 +272,10 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
-    """One query + one checkpoint feeding both sinks (foreachBatch dual
-    write): processed and error records land in their own sinks with the
-    stateful sequence intact across micro-batches."""
+    """One query + one checkpoint feeding both outputs (one foreachBatch
+    writer routing rows by tag): processed and error records land in
+    their own sinks with the stateful sequence intact across
+    micro-batches."""
     from flink_tank_spark.streaming.jobs import start_processor_query
 
     src = str(tmp_path / "in")
@@ -307,20 +284,17 @@ def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
     err_dir = str(tmp_path / "err")
     os.makedirs(ok_dir), os.makedirs(err_dir)
 
-    def text_sink(dirpath):
-        def write(df, batch_id):
-            rows = [r.value for r in df.collect()]
-            if rows:
-                with open(os.path.join(dirpath, f"b{batch_id}.jsonl"), "a") as f:
-                    f.write("\n".join(rows) + "\n")
-        return write
+    def text_sink(df, batch_id):
+        for r in df.collect():
+            dirpath = err_dir if r.tag == TAG_ERROR else ok_dir
+            with open(os.path.join(dirpath, f"b{batch_id}.jsonl"), "a") as f:
+                f.write(r.value + "\n")
 
     def run_available(msgs, name):
         _write_batch(src, name, msgs)
         q = start_processor_query(
             read_jsonl_stream(spark, src),
-            text_sink(ok_dir),
-            text_sink(err_dir),
+            text_sink,
             ckpt,
             f"dual-{name}",
             available_now=True,
@@ -351,6 +325,113 @@ def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
         ("user-1", 1), ("user-1", 2), ("user-1", 3),
     ]
     assert len(err) == 1 and err[0]["rawMessage"] == "{not json"
+
+
+def _mixed_events(n: int) -> list[str]:
+    """n events over 20 keys, every tenth one malformed."""
+    return [
+        "{broken %d" % i if i % 10 == 9
+        else json.dumps({"id": f"user-{i % 20}", "type": f"t{i}", "timestamp": i, "data": {}})
+        for i in range(n)
+    ]
+
+
+def _data_batches(q) -> list[dict]:
+    return [p for p in q.recentProgress if p["numInputRows"] > 0]
+
+
+def test_job1_scans_source_once(spark, tmp_path):
+    """Job 1 is one linear plan: its progress counts each event read
+    once (a plan that forks into a valid and an error branch scans the
+    source twice and reports twice the rows)."""
+    src = str(tmp_path / "in")
+    _write_batch(src, "b1", _mixed_events(300))
+    q = _drain_sequenced(spark, src, str(tmp_path / "ckpt"), str(tmp_path / "out"))
+    assert [p["numInputRows"] for p in _data_batches(q)] == [300]
+
+
+def test_job1_batch_is_one_spark_job(spark, tmp_path):
+    """A Job 1 data batch, both wires included, runs as exactly one
+    Spark job: no persisted batch, no write per output."""
+    import time
+
+    src = str(tmp_path / "in")
+    _write_batch(src, "b1", _mixed_events(300))
+    q = _drain_sequenced(spark, src, str(tmp_path / "ckpt"), str(tmp_path / "out"))
+    assert len(_data_batches(q)) == 1
+    # a streaming query runs its jobs in the job group of its run id; the
+    # status store fills from the listener bus a little after the query
+    # returns, so wait until every job of the group has finished
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(str(q.runId))]
+        if jobs and all(j and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.time() < deadline, jobs
+        time.sleep(0.1)
+    assert len(jobs) == 1, jobs
+
+
+def test_malformed_only_batch_leaves_state_unchanged(spark, tmp_path):
+    """Error rows pass the sequence operator without touching state: a
+    micro-batch of only malformed rows, spread over many buckets, adds
+    and updates no state row."""
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
+    _write_batch(src, "valid", [
+        json.dumps({"id": f"user-{i}", "type": "a", "timestamp": i, "data": {}}) for i in range(5)
+    ])
+    [first] = _data_batches(_drain_sequenced(spark, src, ckpt, out))
+    rows = first["stateOperators"][0]["numRowsTotal"]
+    assert rows > 0
+    _write_batch(src, "malformed", ["{broken %d" % i for i in range(200)])
+    [second] = _data_batches(_drain_sequenced(spark, src, ckpt, out))
+    state = second["stateOperators"][0]
+    assert (state["numRowsTotal"], state["numRowsUpdated"]) == (rows, 0)
+    assert len(spark.read.text(f"{out}-errors").collect()) == 200
+
+
+def test_error_rows_do_not_shift_sequences(spark, tmp_path):
+    """Malformed rows interleaved with one key's events, some of them in
+    that key's bucket, leave the key's sequences 1..n in arrival order."""
+    src = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    [k_bucket] = [r.b for r in spark.range(1).select(key_bucket(F.lit("k")).alias("b")).collect()]
+    candidates = spark.createDataFrame([("{bad %d" % i,) for i in range(2_000)], "raw string")
+    same = [
+        r.raw for r in candidates.filter(key_bucket("raw") == k_bucket).limit(10).collect()
+    ]
+    assert len(same) == 10
+    msgs = []
+    for i in range(20):
+        msgs.append(json.dumps({"id": "k", "type": f"t{i}", "timestamp": i, "data": {}}))
+        msgs.append(same[i // 2] if i % 2 == 0 else "{other %d" % i)
+    _write_batch(src, "b1", msgs)
+    _drain_sequenced(spark, src, str(tmp_path / "ckpt"), out)
+    assert _sequences(spark, out) == {("k", f"t{i}"): i + 1 for i in range(20)}
+    errs = [json.loads(r.value)["rawMessage"] for r in spark.read.text(f"{out}-errors").collect()]
+    assert sorted(errs) == sorted(m for m in msgs if not m.startswith('{"id"'))
+
+
+def test_error_rows_spread_over_buckets(spark):
+    """An error row has no key: it is bucketed by a hash of its raw
+    message, not piled into the bucket of the empty id."""
+    from flink_tank_spark.operators.parse import parse_tagged
+    from flink_tank_spark.streaming.sequence import bucketed
+
+    msgs = ["{broken %d" % i for i in range(500)] + ['{"type":"no-id"}']
+    raw = spark.createDataFrame(list(enumerate(msgs)), "arrival long, value string")
+    rows = bucketed(parse_tagged(raw)).select(
+        "error", "id", "bucket", key_bucket("raw").alias("raw_bucket")
+    ).collect()
+    errors = [r for r in rows if r.error]
+    [valid] = [r for r in rows if not r.error]
+    assert len(errors) == 500 and valid.id == ""
+    assert all(r.bucket == r.raw_bucket for r in errors)
+    assert len({r.bucket for r in errors}) > N_BUCKETS // 2
+    assert sum(r.bucket == valid.bucket for r in errors) < 50
 
 
 def test_ingest_job_lands_partitioned_parquet(spark, tmp_path):
