@@ -62,26 +62,6 @@ bench-streaming:
 bench-streaming-sf1: sf1
 	python scripts/bench_streaming.py data/sf1 2>/dev/null | tail -1
 
-# per-batch incremental cost of the streaming LLM stages (text + emb
-# near-dup sinks over N micro-batches, incl. a post-compaction batch)
-bench-streaming-neardup: sf1
-	python scripts/streaming_neardup_bench.py data/sf1 16 8 2>/dev/null | tail -1
-
-# streaming CEP matcher drain at sf1 — throughput + exact batch parity
-bench-cep: sf1
-	python scripts/bench_cep.py data/sf1 16 2>/dev/null | tail -1
-
-bench-streaming-sketch: sf1
-	python scripts/bench_streaming_sketch.py data/sf1 16 8 2>/dev/null | tail -1
-
-# incremental materialized-view drain (rows/sec + exact q1 parity)
-bench-streaming-matview: sf1
-	python scripts/bench_streaming_matview.py data/sf1 16 8 2>/dev/null | tail -1
-
-# windowed Top-N + anomaly-monitor drains (ev/sec + exact batch parity)
-bench-streaming-quality: sf1
-	python scripts/bench_streaming_quality.py data/sf1 16 8 2>/dev/null | tail -1
-
 # multi-probe IVF recall/cost curve (probes 1/2/4 vs exact top-5).
 # sf0.1 is the meaningful corpus: sfN replicas put a query's exact
 # duplicates in its own cell, pinning recall at 1.0
@@ -115,22 +95,12 @@ kafka-e2e:
 conf-curation: sf5
 	python scripts/conf_100tb_curation.py data/sf5 16 CONF100TB_CURATION_r11.json
 
-# candidate-volume effect of the containment index re-rank compaction
-# (lossless: verified pair set asserted identical before/after)
-rerank-volume: sf1
-	python scripts/containment_rerank_volume.py data/sf1 16 CONTAINMENT_RERANK_r11.json
-
 # BPE trainer cost curve: naive vs incremental-delta vs local at 256
 # merges over a 20k-word synthetic vocabulary
 bpe-curve:
 	python scripts/bpe_scale_curve.py 20000 BPE_SCALE_r11.json
 
 # round-12 evidence targets ------------------------------------------------
-
-# streaming curation drains (wsample/vocab/dsir/sessions + the r12 BPE
-# vocabulary maintainer), each BIT-compared against its batch twin
-bench-streaming-curation: sf1
-	python scripts/bench_streaming_curation.py data/sf1 16 8 2>/dev/null | tail -1
 
 # BPE driver envelope at a 1M-word vocabulary: collect footprint vs the
 # symbol-count dispatch bound, local-trainer cost at 256/1024/4096

@@ -195,11 +195,8 @@ def lsh_bucket_rows(
     signatures: DataFrame, id_col: str = "doc_id", rows_per_band: int = 2
 ) -> DataFrame:
     """Stack a signature table to (id, bucket) rows — one row per band,
-    bucket = 'band_index:md5(band hashes)'. The exploded form both the
-    batch candidate join (:func:`lsh_candidate_pairs`) and the streaming
-    incremental index (streaming/neardup.py) build on — one definition,
-    so the accumulated stream index can never drift from the batch
-    blocking scheme."""
+    bucket = 'band_index:md5(band hashes)'. The exploded form the
+    candidate join (:func:`lsh_candidate_pairs`) builds on."""
     mh_cols = [F.col(c) for c in signatures.columns if c.startswith("mh_")]
     bands = signatures.select(
         id_col, *lsh_band_buckets(mh_cols, rows_per_band)
@@ -675,14 +672,11 @@ def containment_drop_ids(
 def containment_drop_from_pairs(
     pairs: DataFrame, sizes: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
-    """The pair-level keep-one rule of :func:`containment_drop_ids`,
-    factored out so the streaming containment view
-    (streaming/containment.containment_drop_view) folds its ACCUMULATED
-    verified pair table through the LITERAL same code — parity with the
-    batch query is then structural, not re-implemented. ``pairs`` is
-    the ordered (id_a contained-in id_b) verdict set; ``sizes`` is
-    (_sid, _n) shingle-set sizes. Drops id_a iff nb > na, ties broken
-    by keeping the smaller id. One deterministic pass, no iteration."""
+    """The pair-level keep-one rule of :func:`containment_drop_ids`.
+    ``pairs`` is the ordered (id_a contained-in id_b) verdict set;
+    ``sizes`` is (_sid, _n) shingle-set sizes. Drops id_a iff nb > na,
+    ties broken by keeping the smaller id. One deterministic pass, no
+    iteration."""
     p = (
         pairs.join(
             sizes.select(F.col("_sid").alias("id_a"), F.col("_n").alias("na")),

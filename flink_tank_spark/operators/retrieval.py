@@ -140,136 +140,6 @@ def _ub_col(k1: float, b: float) -> Column:
     ).cast("long").alias("ub_i", metadata={"k1": k1, "b": b})
 
 
-def _frontier(by_dl: DataFrame) -> DataFrame:
-    """(term, frontier) from a (term, dl, tf[, cnt]) table holding the
-    per-(term, dl) MAX tf: keep a (dl, tf) point iff no smaller-or-equal
-    dl carries a >= tf — the Pareto frontier under (tf up, dl down).
-
-    Safe window: after the (term, dl) max-reduction a term has at most
-    |distinct doc lengths| rows (bounded — NOT its posting-list length),
-    so the per-term sort can't funnel a hot term's corpus-sized postings
-    into one task. The frontier is collected sorted for deterministic
-    output."""
-    w = (
-        W.partitionBy("term")
-        .orderBy("dl")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    return (
-        by_dl.withColumn("_pm", F.max("tf").over(w))
-        .filter(F.col("_pm").isNull() | (F.col("tf") > F.col("_pm")))
-        .groupBy("term")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("dl", "tf"))
-            ).alias("frontier")
-        )
-    )
-
-
-def term_state(posts: DataFrame) -> DataFrame:
-    """MERGEABLE per-term index state: (term, df, frontier) — the
-    sufficient statistics from which :func:`term_statistics` can be
-    finalized EXACTLY under any append history.
-
-    Why not merge (df, ub_i) directly: ub_i bakes in corpus-global
-    quantities — idf(df, n_docs) and the dl/avgdl normalization — that
-    CHANGE when documents are appended, so stored upper bounds go stale
-    (and which posting attains the per-term max part can flip as avgdl
-    moves). What IS append-stable: ``df`` (counts add) and the Pareto
-    frontier of (tf, dl) posting points — part(tf, dl; avgdl) is
-    strictly increasing in tf and decreasing in dl for any avgdl, so the
-    maximizing posting always lies on the frontier, whatever avgdl
-    becomes. State per term: one long + a frontier bounded by the
-    number of distinct doc lengths (tiny in practice).
-
-    Merge = :func:`merge_term_states` (df sum, frontier union +
-    re-frontier); finalize = :func:`term_statistics_from_state`, proven
-    bit-identical to a from-scratch build in tests/test_scale_ops.py.
-    """
-    by_dl = posts.groupBy("term", "dl").agg(
-        F.max("tf").alias("tf"), F.count(F.lit(1)).alias("cnt")
-    )
-    dfreq = by_dl.groupBy("term").agg(F.sum("cnt").alias("df"))
-    return dfreq.join(_frontier(by_dl), "term")
-
-
-def merge_term_states(states: DataFrame) -> DataFrame:
-    """Fold a union of :func:`term_state` outputs (e.g. one per ingest
-    batch) into one: df merges by SUM; frontiers merge by union +
-    re-frontier. Associative and commutative, so any merge tree over
-    any append history yields the same state."""
-    exploded = states.select(
-        "term", "df", F.explode("frontier").alias("p")
-    ).select("term", "df", F.col("p.dl").alias("dl"), F.col("p.tf").alias("tf"))
-    dfreq = (
-        states.groupBy("term").agg(F.sum("df").alias("df"))
-    )
-    by_dl = exploded.groupBy("term", "dl").agg(F.max("tf").alias("tf"))
-    return dfreq.join(_frontier(by_dl), "term")
-
-
-def term_statistics_from_state(
-    state: DataFrame,
-    stats: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Finalize (term, df, ub_i) from the mergeable :func:`term_state` —
-    bit-identical to :func:`term_statistics` over the full postings
-    (same IEEE part/ub expressions; the frontier contains the
-    arg-max posting for ANY avgdl, see :func:`term_state`). ``stats``
-    is the CURRENT corpus stats row (from :func:`corpus_stats` or
-    :func:`finalize_corpus_stats`)."""
-    return (
-        state.select("term", "df", F.explode("frontier").alias("p"))
-        .select(
-            "term", "df",
-            F.col("p.dl").alias("dl"), F.col("p.tf").alias("tf"),
-        )
-        .crossJoin(F.broadcast(stats))
-        .groupBy("term")
-        .agg(
-            F.first("df").alias("df"),
-            F.max(_part_expr(k1, b)).alias("_max_part"),
-            F.first("n_docs").alias("_n"),
-        )
-        .select("term", "df", _ub_col(k1, b))
-    )
-
-
-def stats_state(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """MERGEABLE corpus-stats state: 1-row (n_docs, dl_ssum) — doc count
-    and the exact fixed-point-scaled doc-length sum (both add under
-    append). :func:`finalize_corpus_stats` reproduces
-    :func:`corpus_stats` bit-exactly: integer partial sums commute."""
-    from flink_tank_spark.functions.numeric import _scaled
-
-    return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.size(F.split(F.col(text_col), " ")).alias("dl"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(_scaled(F.col("dl"))).alias("dl_ssum"),
-        )
-    )
-
-
-def finalize_corpus_stats(states: DataFrame) -> DataFrame:
-    """Fold 1-row :func:`stats_state` frames (unioned) into the (n_docs,
-    avgdl) row :func:`corpus_stats` produces — same division, same
-    operand values, bit-identical avgdl."""
-    from flink_tank_spark.functions.numeric import SCALE
-
-    return states.agg(
-        F.sum("n_docs").alias("n_docs"),
-        (
-            F.sum("dl_ssum").cast("double") / F.lit(SCALE)
-            / F.sum("n_docs")
-        ).alias("avgdl"),
-    )
-
-
 def _check_term_stats_params(term_stats: DataFrame, k1: float, b: float) -> None:
     """Driver-side (zero-job) guard: a term_statistics table built with
     different k1/b than the query-time call carries stale ub_i upper

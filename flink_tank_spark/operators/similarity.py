@@ -277,71 +277,6 @@ def ivf_assign(
     )
 
 
-def kmeans_centroids_plan(
-    vectors: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic Lloyd k-means in pure DataFrame ops → (centroid_id, cv).
-
-    REFERENCE implementation (and the oracle-SQL mirror's shape): kept so
-    tests can pin the fused trainer (:func:`kmeans_centroids`) bit-equal
-    to the plan-based construction. Production callers use
-    :func:`kmeans_centroids`, which computes the SAME values with one
-    fused Arrow crossing per iteration instead of this nested
-    broadcast-join → window → posexplode chain (whose physical plan
-    re-nests per iteration — the dominant cost of the IVF/PQ queries).
-
-    Designed to be ORACLE-REPRODUCIBLE (and cluster-reproducible), which
-    rules out k-means||'s random seeding and raw-double means:
-
-    - init: the ``k`` smallest-id vectors (deterministic seed set; a
-      sort-limit, planned as TakeOrderedAndProject — works on sparse or
-      offset id spaces, unlike a ``id < k`` filter);
-    - assign: nearest centroid by the fixed-point cosine (ties → lowest
-      centroid id) — one broadcast-hash pass per iteration;
-    - update: per-(cell, dim) mean via posexplode + the exact fixed-point
-      sum (functions/numeric.davg), recomposed with array_sort — so the
-      new centroids are bit-identical under ANY partitioning and in the
-      DuckDB oracle mirror.
-
-    Each iteration is one corpus scan + one (cell, dim)-key aggregation
-    (k×dim groups — tiny); centroids stay broadcast-sized throughout.
-    Cells that lose all members drop out (both engines drop identically).
-    """
-    from flink_tank_spark.functions.numeric import davg
-
-    cent = (
-        vectors.orderBy(F.col(id_col))
-        .limit(k)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            as_double_array(F.col(vec_col)).alias("cv"),
-        )
-    )
-    for _ in range(iters):
-        assigned = ivf_assign(
-            vectors,
-            cent.select(F.col("centroid_id").alias(id_col), F.col("cv").alias(vec_col)),
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        means = (
-            assigned.select("centroid_id", F.posexplode("v").alias("dim", "val"))
-            .groupBy("centroid_id", "dim")
-            .agg(davg("val", "mval"))
-        )
-        cent = means.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mval"))),
-                lambda s: s["mval"],
-            ).alias("cv")
-        )
-    return cent
-
-
 def _lloyd_iteration(
     vectors: DataFrame,
     cents: list[tuple],
@@ -353,8 +288,9 @@ def _lloyd_iteration(
     the exact davg finish in JVM aggregation. Returns the new
     [(centroid_id, [mean...]), ...] rows (bounded: ≤ k entries).
 
-    Bit-identity with the plan-based reference (pinned in
-    tests/test_llm_ops.py::test_kmeans_fused_matches_plan_reference):
+    Bit-identity with the plan-based reference construction (kept in
+    tests/test_llm_ops.py, pinned by
+    test_kmeans_fused_matches_plan_reference):
 
     - cosine scores: the per-term ``floor(x·y·1e12 + 0.5)`` values are
       integral doubles with |Σ| ≪ 2^53, so numpy's summation order gives
@@ -485,16 +421,31 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic Lloyd k-means → (centroid_id, cv), bit-identical to
-    :func:`kmeans_centroids_plan` (the documented reference construction
-    and oracle mirror — see its docstring for the determinism design) but
-    executed as a driver-coordinated loop: one fused Arrow crossing per
+    """Deterministic Lloyd k-means → (centroid_id, cv).
+
+    Designed to be ORACLE-REPRODUCIBLE (and cluster-reproducible), which
+    rules out k-means||'s random seeding and raw-double means:
+
+    - init: the ``k`` smallest-id vectors (deterministic seed set; a
+      sort-limit — works on sparse or offset id spaces, unlike a
+      ``id < k`` filter);
+    - assign: nearest centroid by the fixed-point cosine (ties → lowest
+      centroid id);
+    - update: per-(cell, dim) mean through the exact fixed-point sum
+      (functions/numeric.davg), so the new centroids are bit-identical
+      under ANY partitioning and in the DuckDB oracle mirror.
+
+    Cells that lose all members drop out (both engines drop identically).
+
+    Executed as a driver-coordinated loop: one fused Arrow crossing per
     iteration instead of a per-iteration broadcast-join → window →
     posexplode plan that re-nests inside every later iteration's
-    broadcast. Plan effect on emb_ivf_kmeans_topk: the trained centroids
-    enter the final assignment as a LocalTableScan, so the query plan
-    carries ONE assignment pass instead of the nested training tree
-    (12 → ≤2 Python nodes); emb_pq_topk drops ~4× more."""
+    broadcast. tests/test_llm_ops.py keeps that plan-based construction
+    (``kmeans_centroids_plan``) and pins this trainer bit-equal to it.
+    Plan effect on emb_ivf_kmeans_topk: the trained centroids enter the
+    final assignment as a LocalTableScan, so the query plan carries ONE
+    assignment pass instead of the nested training tree (12 → ≤2 Python
+    nodes); emb_pq_topk drops ~4× more."""
     return _train_centroids_driver(vectors, k, iters, id_col, vec_col, "cosine")
 
 
@@ -566,80 +517,6 @@ def cell_blocked_pairs(
                 frames.append(
                     pd.DataFrame(
                         {"id_a": ia[r, 0], "id_b": ids[c], "cos_sim": cos[r, c]}
-                    )
-                )
-        return pd.concat(frames) if frames else _empty
-
-    return (
-        assigned.groupBy("centroid_id")
-        .applyInPandas(per_cell, schema=out_schema)
-        .distinct()
-    )
-
-
-def cell_probe_pairs(
-    assigned: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    probe_col: str = "is_probe",
-) -> DataFrame:
-    """Rectangular variant of :func:`cell_blocked_pairs` for the
-    streaming-incremental case: only pairs with at least one PROBE-side
-    member are wanted (a micro-batch probing the accumulated corpus), so
-    the per-cell matmul is probe-rows × all-rows instead of the full
-    square — an index vector crosses Arrow once per batch that probes
-    its cell, never once per candidate pair, and none of the
-    index × index work is recomputed.
-
-    Input rows carry ``probe_col`` (boolean); output and bit-exactness
-    contract are identical to :func:`cell_blocked_pairs` (same
-    fixed-point dot, same zero-norm drop, pairs normalized id_a < id_b,
-    multi-probe duplicates removed by the final distinct), so when every
-    row is a probe this equals ``cell_blocked_pairs(assigned, ...)``
-    exactly — pinned in tests/test_streaming_emb_neardup.py.
-
-    Memory contract: one cell per task, O(cell_population × dim) for the
-    group plus a bounded (chunk, m, dim) intermediate — same as the
-    square variant, with the chunk loop running over probe rows only.
-    """
-    out_schema = "id_a long, id_b long, cos_sim double"
-    _empty = pd.DataFrame({"id_a": pd.Series(dtype="int64"),
-                           "id_b": pd.Series(dtype="int64"),
-                           "cos_sim": pd.Series(dtype="float64")})
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf[pdf["vnorm"] > 0.0]  # zero-norm ⇒ NaN cosine
-        m = len(pdf)
-        probe = pdf[probe_col].to_numpy().astype(bool)
-        if m < 2 or not probe.any():
-            return _empty
-        ids = pdf[id_col].to_numpy()
-        v = np.stack(pdf["v"].to_numpy()).astype(np.float64, copy=False)
-        nrm = pdf["vnorm"].to_numpy()
-        p_idx = np.nonzero(probe)[0]
-        frames = []
-        step = max(1, int(8_000_000 / (m * v.shape[1])))
-        for i0 in range(0, len(p_idx), step):
-            sel = p_idx[i0 : i0 + step]
-            chunk = v[sel]
-            dots = (
-                np.floor(chunk[:, None, :] * v[None, :, :] * SCALE + 0.5).sum(axis=2)
-                / SCALE
-            )
-            cos = dots / (nrm[sel, None] * nrm[None, :])
-            ia = ids[sel, None]
-            ib = ids[None, :]
-            # a probe×probe pair surfaces from both sides with identical
-            # values; the normalized form collapses in the distinct
-            keep = (ia != ib) & (cos >= threshold)
-            r, c = np.nonzero(keep)
-            if len(r):
-                a = ia[r, 0]
-                b = ids[c]
-                frames.append(
-                    pd.DataFrame(
-                        {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b),
-                         "cos_sim": cos[r, c]}
                     )
                 )
         return pd.concat(frames) if frames else _empty
@@ -726,44 +603,6 @@ def l2_assign(
     )
 
 
-def kmeans_centroids_l2_plan(
-    vectors: DataFrame,
-    k: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic Lloyd k-means under L2 → (centroid_id, cv). Same
-    oracle-reproducible construction as the cosine
-    :func:`kmeans_centroids_plan` (k smallest-id seeds, fixed-point means
-    via davg, array_sort recomposition) with the assignment metric
-    swapped to exact fixed-point squared L2. REFERENCE implementation
-    kept for bit-equality pinning of :func:`kmeans_centroids_l2`."""
-    from flink_tank_spark.functions.numeric import davg
-
-    cent = (
-        vectors.orderBy(F.col(id_col))
-        .limit(k)
-        .select(
-            F.col(id_col).alias("centroid_id"),
-            as_double_array(F.col(vec_col)).alias("cv"),
-        )
-    )
-    for _ in range(iters):
-        assigned = l2_assign(vectors, cent, id_col=id_col, vec_col=vec_col)
-        joined = assigned.join(vectors, id_col).select(
-            "centroid_id", F.posexplode(as_double_array(F.col(vec_col))).alias("dim", "val")
-        )
-        means = joined.groupBy("centroid_id", "dim").agg(davg("val", "mval"))
-        cent = means.groupBy("centroid_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mval"))),
-                lambda s: s["mval"],
-            ).alias("cv")
-        )
-    return cent
-
-
 def kmeans_centroids_l2(
     vectors: DataFrame,
     k: int = 16,
@@ -771,13 +610,13 @@ def kmeans_centroids_l2(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic Lloyd k-means under L2, bit-identical to
-    :func:`kmeans_centroids_l2_plan` but driver-coordinated with one
-    fused Arrow crossing per iteration (see :func:`kmeans_centroids`).
-    The L2 reference joins the assignment back to ``vectors`` for the
-    means — no zero-norm filter on either side — which the fused crossing
-    reproduces by computing assignment and scaled means from the SAME
-    in-batch rows."""
+    """Deterministic Lloyd k-means under L2: the construction of
+    :func:`kmeans_centroids` (k smallest-id seeds, fixed-point davg
+    means, one fused Arrow crossing per iteration) with the assignment
+    metric swapped to exact fixed-point squared L2 (:func:`l2_assign`).
+    No zero-norm filter: L2 is defined everywhere, and assignment and
+    scaled means come from the SAME in-batch rows. Pinned bit-equal to
+    the plan-based ``kmeans_centroids_l2_plan`` in tests/test_llm_ops.py."""
     return _train_centroids_driver(vectors, k, iters, id_col, vec_col, "l2")
 
 
@@ -796,8 +635,9 @@ def pq_train_codebooks(
     m_sub x (1 + iters) corpus-scanning jobs — 8 scans + 4 seed collects
     for the PQ default; now iters scans + 1). The subspaces are
     independent slices, so each one's assignment/means inside the shared
-    crossing are exactly :func:`kmeans_centroids_l2`'s — bit-equality
-    pinned in tests/test_llm_ops.py::test_pq_codebooks_match_per_subspace_trainer.
+    crossing are exactly :func:`kmeans_centroids_l2`'s — pinned bit-equal,
+    per slice, to the plan-based ``kmeans_centroids_l2_plan`` kept in
+    tests/test_llm_ops.py (test_pq_codebooks_match_per_subspace_trainer).
 
     Returns one (centroid_id, cv) DataFrame per subspace, same as
     calling :func:`kmeans_centroids_l2` on each slice."""
@@ -1250,8 +1090,7 @@ def srp_near_dup_pairs(
     """Banded-SRP-blocked near-duplicate pairs with exact rescoring —
     the stateless alternative to the IVF blocking of
     cell_blocked_pairs: no centroid training, no drift, the hash IS the
-    index (which is why the streaming twin, streaming/srp_neardup.py,
-    needs zero index maintenance beyond appends).
+    index.
 
     Candidates = vectors sharing ≥1 band key (equi-join, id_a < id_b,
     DISTINCT over multi-band collisions), verified by the exact

@@ -343,8 +343,7 @@ def value_hist_events(ev: DataFrame) -> DataFrame:
     """Exact (type, day, scaled-value) counts — the micro-unit value
     histogram. One map-side-combinable corpus scan; everything the
     outlier monitor needs derives from this BOUNDED table (distinct
-    values per group, not rows), which is also the mergeable state the
-    streaming twin (streaming/anomaly.py) folds by SUM."""
+    values per group, not rows)."""
     return (
         ev.select(
             "event_type",

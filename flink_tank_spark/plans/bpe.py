@@ -82,16 +82,12 @@ def _trained_merges(
     return _MERGES_CACHE[key]
 
 
-# -- shared finalize functions (batch queries AND streaming/bpe.py) -------
-#
-# The streaming twin folds per-batch (lang, word, cnt) deltas and runs
-# these LITERAL functions at read, so batch/stream parity is structural
-# (the vocab_cov/dsir pattern): same folded counts in, same result out.
+# -- shared finalize functions (merges and tokenize queries) --------------
 
 def lang_word_counts(docs: DataFrame) -> DataFrame:
     """One corpus scan → the per-(lang, word) count table — the
-    mergeable state both tokenize queries and the streaming twin share
-    (global word counts are its lang-marginal)."""
+    mergeable state both tokenize queries share (global word counts are
+    its lang-marginal)."""
     return (
         docs.select(
             "lang",

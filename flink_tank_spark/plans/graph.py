@@ -79,9 +79,7 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pagerank_top(pr: DataFrame, top_n: int = PR_TOPN) -> DataFrame:
-    """The top-N finalize over a (doc_id, degree, pr_scaled) rank table
-    — shared verbatim by doc_pagerank and the streaming view
-    (streaming/pagerank.py), so their parity is structural."""
+    """The top-N finalize over a (doc_id, degree, pr_scaled) rank table."""
     top = pr.orderBy(F.col("pr_scaled").desc(), "doc_id").limit(top_n)
     return top.withColumn(
         "rk",

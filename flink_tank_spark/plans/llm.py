@@ -3228,9 +3228,7 @@ def doc_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def source_overlap_from_shingles(sh: DataFrame) -> DataFrame:
     """Finalize: pairwise overlap from a DISTINCT (source, g) shingle
-    table. Shared verbatim by the batch query above and the streaming
-    view (streaming/source_overlap.py) — parity is structural, the
-    vocab_cov.py pattern.
+    table.
 
     ``sh`` is referenced four times below (both self-join sides + the
     two sizes broadcasts) — un-materialized, the whole upstream

@@ -45,8 +45,7 @@ PROFILE_COLS = (
 
 def melt_numeric(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
     """The shared melt stage: one row per (col_name, value-as-double)
-    pair — the form both the one-pass batch profile and the streaming
-    per-batch deltas (streaming/profile.py) aggregate over."""
+    pair — the form the one-pass batch profile aggregates over."""
     stack = "stack({}, {}) as (col_name, val)".format(
         len(cols),
         ", ".join(f"'{c}', CAST({c} AS DOUBLE)" for c in cols),

@@ -28,9 +28,8 @@ Scale shape at 100 TB:
 - the global bottom-k is orderBy+limit → TakeOrderedAndProject: each
   task keeps its local k, the driver merges P·k rows — never a global
   sort, never a single-reducer window;
-- the winning-ticket table is ≤ k rows — broadcastable state, which is
-  exactly what the streaming twin (streaming/wsample.py) folds
-  incrementally: bottom-k is a KMV-style mergeable sketch
+- the winning-ticket table is ≤ k rows — broadcastable state: bottom-k
+  is a KMV-style mergeable sketch
   (bottom_k(A ∪ B) = bottom_k(bottom_k(A) ∪ bottom_k(B))).
 """
 
@@ -226,9 +225,7 @@ DSIR_TARGET_LANG = "en"
 
 
 def dsir_bucket_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, lang, bkt, c) hashed-bigram counts of a document set —
-    the mergeable unit the streaming twin (streaming/dsir.py)
-    accumulates per micro-batch."""
+    """(doc_id, lang, bkt, c) hashed-bigram counts of a document set."""
     ws = F.split(F.col("text"), " ")
     idx = F.when(
         F.size(ws) >= 2, F.sequence(F.lit(1), F.size(ws) - 1)
@@ -360,10 +357,8 @@ def dsir_doc_scores(dbc: DataFrame) -> DataFrame:
 
 def dsir_weights_from_counts(dbc: DataFrame) -> DataFrame:
     """The per-language DSIR score summary from an already-built
-    (doc_id, lang, bkt, c) table — shared verbatim by the batch query
-    and the streaming view (streaming/dsir.py): the ≤256-row weight
-    table and every aggregate are pure algebra over the mergeable
-    bucket counts."""
+    (doc_id, lang, bkt, c) table: the ≤256-row weight table and every
+    aggregate are pure algebra over the mergeable bucket counts."""
     return (
         dsir_doc_scores(dbc).groupBy("lang")
         .agg(

@@ -374,10 +374,7 @@ def emb_srp_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative to emb_near_dup_pairs): band-collision candidates,
     exact fixed-point cosine ≥ 0.45. Band width adapts to the corpus
     (the IVF adaptive-cell precedent: one count, an integer threshold
-    ladder mirrored in the oracle); the streaming twin
-    (streaming/srp_neardup.py) freezes its width at stream start —
-    parity pinned with matching explicit configs in
-    tests/test_streaming_srp_neardup.py."""
+    ladder mirrored in the oracle)."""
     # metadata-cheap parquet count of the RAW table — the oracle's
     # nd_params counts the same population (not the nz-filtered view),
     # so engine and oracle pick the same width even when the corpus

@@ -65,8 +65,7 @@ def top_vocab(doc_token_counts: DataFrame, v: int = VOCAB_V) -> DataFrame:
 
 
 def doc_token_counts(docs: DataFrame) -> DataFrame:
-    """(doc_id, source, tok, c) token bag of a document set — the
-    mergeable unit the streaming twin accumulates per micro-batch."""
+    """(doc_id, source, tok, c) token bag of a document set."""
     return (
         docs.select(
             "doc_id",
@@ -79,9 +78,7 @@ def doc_token_counts(docs: DataFrame) -> DataFrame:
 
 
 def vocab_coverage_from_counts(dtc: DataFrame, v: int = VOCAB_V) -> DataFrame:
-    """The per-source OOV audit from an already-built token-count table
-    — shared verbatim by the batch query and the streaming view
-    (streaming/vocab_cov.py), so their parity is structural."""
+    """The per-source OOV audit from an already-built token-count table."""
     vocab = top_vocab(dtc, v).withColumn("_inv", F.lit(1))
     j = dtc.join(F.broadcast(vocab), "tok", "left")
     per_doc = j.groupBy("doc_id", "source").agg(

@@ -7,6 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from flink_tank_spark.functions.numeric import davg
 from flink_tank_spark.io.tables import load_table
 from flink_tank_spark.operators import dedup, multimodal, similarity
 
@@ -211,6 +212,69 @@ def test_kmeans_seeds_from_k_smallest_ids_on_sparse_ids(spark):
     assert got == [1000, 1007, 1014, 1021]
 
 
+def kmeans_centroids_plan(vectors, k: int, iters: int):
+    """Plan-based REFERENCE for :func:`similarity.kmeans_centroids`: the
+    same deterministic Lloyd k-means in pure DataFrame ops (smallest-id
+    seeds, fixed-point cosine assignment, davg means recomposed with
+    array_sort), the shape the DuckDB oracle SQL mirrors. Its physical
+    plan re-nests per iteration, which is why the engine trains with one
+    fused Arrow crossing per iteration instead."""
+    cent = (
+        vectors.orderBy("vec_id")
+        .limit(k)
+        .select(
+            F.col("vec_id").alias("centroid_id"),
+            similarity.as_double_array(F.col("embedding")).alias("cv"),
+        )
+    )
+    for _ in range(iters):
+        assigned = similarity.ivf_assign(
+            vectors,
+            cent.select(F.col("centroid_id").alias("vec_id"), F.col("cv").alias("embedding")),
+        )
+        means = (
+            assigned.select("centroid_id", F.posexplode("v").alias("dim", "val"))
+            .groupBy("centroid_id", "dim")
+            .agg(davg("val", "mval"))
+        )
+        cent = means.groupBy("centroid_id").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "mval"))),
+                lambda s: s["mval"],
+            ).alias("cv")
+        )
+    return cent
+
+
+def kmeans_centroids_l2_plan(vectors, k: int, iters: int):
+    """Plan-based REFERENCE for :func:`similarity.kmeans_centroids_l2`:
+    :func:`kmeans_centroids_plan` with the assignment metric swapped to
+    exact fixed-point squared L2, means over the assignment joined back
+    to ``vectors``."""
+    cent = (
+        vectors.orderBy("vec_id")
+        .limit(k)
+        .select(
+            F.col("vec_id").alias("centroid_id"),
+            similarity.as_double_array(F.col("embedding")).alias("cv"),
+        )
+    )
+    for _ in range(iters):
+        assigned = similarity.l2_assign(vectors, cent)
+        joined = assigned.join(vectors, "vec_id").select(
+            "centroid_id",
+            F.posexplode(similarity.as_double_array(F.col("embedding"))).alias("dim", "val"),
+        )
+        means = joined.groupBy("centroid_id", "dim").agg(davg("val", "mval"))
+        cent = means.groupBy("centroid_id").agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "mval"))),
+                lambda s: s["mval"],
+            ).alias("cv")
+        )
+    return cent
+
+
 def test_kmeans_fused_matches_plan_reference(spark, sf_dir):
     """The driver-coordinated fused Lloyd trainers (one Arrow crossing
     per iteration) must be BIT-EQUAL to the plan-based reference
@@ -225,11 +289,11 @@ def test_kmeans_fused_matches_plan_reference(spark, sf_dir):
 
     for k, iters in [(8, 2), (3, 1)]:
         assert rows(similarity.kmeans_centroids(emb, k=k, iters=iters)) == rows(
-            similarity.kmeans_centroids_plan(emb, k=k, iters=iters)
+            kmeans_centroids_plan(emb, k=k, iters=iters)
         ), ("cosine", k, iters)
     sub = emb.select("vec_id", F.slice("embedding", 1, 16).alias("embedding"))
     assert rows(similarity.kmeans_centroids_l2(sub, k=16, iters=2)) == rows(
-        similarity.kmeans_centroids_l2_plan(sub, k=16, iters=2)
+        kmeans_centroids_l2_plan(sub, k=16, iters=2)
     ), "l2"
     # zero-norm seed edge: smallest id is a zero vector -> excluded from
     # every assignment pass, so its cell starves and drops out of cent_1.
@@ -239,7 +303,7 @@ def test_kmeans_fused_matches_plan_reference(spark, sf_dir):
         emb.select("vec_id", similarity.as_double_array(F.col("embedding")).alias("embedding"))
     )
     a = rows(similarity.kmeans_centroids(embz, k=4, iters=2))
-    assert a == rows(similarity.kmeans_centroids_plan(embz, k=4, iters=2))
+    assert a == rows(kmeans_centroids_plan(embz, k=4, iters=2))
     assert -1 not in [c for c, _ in a]
 
 
@@ -251,7 +315,7 @@ def test_pq_codebooks_match_per_subspace_trainer(spark, sf_dir):
     books = similarity.pq_train_codebooks(emb, m_sub=4, sub_dim=16, codes=16, iters=2)
     for m in range(4):
         sub = emb.select("vec_id", F.slice("embedding", m * 16 + 1, 16).alias("embedding"))
-        ref = similarity.kmeans_centroids_l2_plan(sub, k=16, iters=2)
+        ref = kmeans_centroids_l2_plan(sub, k=16, iters=2)
         a = sorted((r.centroid_id, list(r.cv)) for r in books[m].collect())
         b = sorted((r.centroid_id, list(r.cv)) for r in ref.collect())
         assert a == b, f"subspace {m}"
