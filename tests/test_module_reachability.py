@@ -1,10 +1,11 @@
 """Every engine module is reachable from an entry point.
 
 Walks the static import graph (absolute and relative imports, at any
-nesting depth) from the entry points that jobs, the bench and the driver
-contract run, and fails on any ``flink_tank_spark`` module the walk does
-not reach: a module that only its own tests and scripts import is a
-second implementation that nothing runs. Spark-free.
+nesting depth) from the entry points: ``__spark_entry__.py``,
+``bench.py``, the job and tool mains, and the query registry. Fails on
+any ``flink_tank_spark`` module the walk does not reach: a module that
+only its own tests and scripts import is a second implementation that
+nothing runs. Spark-free.
 """
 
 from __future__ import annotations
