@@ -28,8 +28,9 @@ Scale shape at 100 TB:
 - the global bottom-k is orderBy+limit → TakeOrderedAndProject: each
   task keeps its local k, the driver merges P·k rows — never a global
   sort, never a single-reducer window;
-- the winning-ticket table is ≤ k rows — broadcastable state: bottom-k
-  is a KMV-style mergeable sketch
+- the winning-ticket table is ≤ k rows — broadcastable state, which is
+  exactly what the streaming twin (streaming/wsample.py) folds
+  incrementally: bottom-k is a KMV-style mergeable sketch
   (bottom_k(A ∪ B) = bottom_k(bottom_k(A) ∪ bottom_k(B))).
 """
 

@@ -14,6 +14,11 @@ orders scan for the update aggregate (map-side combinable exact dsum),
 one equi-join of updates onto the dimension, and a union — dimension
 tables are small next to facts at any scale, and nothing here touches
 the fact table twice.
+
+The streaming twin (streaming/scd.py) maintains the same table
+incrementally from an update stream via an append-only change log and
+derives identical history on read — batch/stream parity is pinned by
+tests/test_streaming_scd.py.
 """
 
 from __future__ import annotations

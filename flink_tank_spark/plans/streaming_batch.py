@@ -607,7 +607,9 @@ TOPN_K = 3
 
 def hourly_top_users_from_counts(counts: DataFrame) -> DataFrame:
     """Finalize (window_start, user_id, n_events) counts to the
-    deterministic per-window top-3."""
+    deterministic per-window top-3 — ONE definition shared by the batch
+    query and the streaming-incremental twin (streaming/topk.py), so
+    parity is structural, not coincidental."""
     from flink_tank_spark.operators.rank import salted_topk
 
     order = [F.col("n_events").desc(), F.col("user_id").asc()]

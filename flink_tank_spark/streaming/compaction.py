@@ -1,9 +1,13 @@
 """Crash-safe partition-swap protocol for the streaming index compacts.
 
-The incremental sinks (streaming/neardup.py, emb_neardup.py,
-retrieval_index.py) accumulate per-micro-batch ``ingest_batch=<b>``
-parquet partitions and periodically fold them into one merged
-``ingest_batch=-1`` partition. The naive swap (write tmp → delete
+The incremental sinks (streaming/sketches.py, matview.py, scd.py,
+topk.py, wsample.py) accumulate per-micro-batch ``ingest_batch=<b>``
+parquet partitions, each written with mode=overwrite so a foreachBatch
+replay after a crash is idempotent, and periodically fold them into one
+merged ``ingest_batch=-1`` partition. A compact runs only while the
+stream is STOPPED: compacting a partition whose batch could still
+replay would let the replayed delta double-count on top of the merged
+row it was folded into. The naive swap (write tmp → delete
 originals → rename tmp) has a silent-corruption window: a crash after
 the deletes but before the rename leaves ZERO visible partitions (the
 underscore-prefixed tmp dir is hidden from Spark reads), so the next

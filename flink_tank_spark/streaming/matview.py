@@ -24,8 +24,8 @@ shipdate predicate never enter state), exactly how an incremental view
 maintainer pushes the view definition to the delta stream.
 
 Layout under ``view_dir`` (one partition per micro-batch, written with
-mode=overwrite so foreachBatch replay is idempotent — the same argument
-as streaming/retrieval_index.py):
+mode=overwrite so foreachBatch replay is idempotent — the
+streaming/compaction.py protocol):
 
     pricing_state/ingest_batch=<b>   l_returnflag, l_linestatus,
                                      sq sb sdp sch sd (scaled decimal
@@ -209,8 +209,8 @@ def load_nation_revenue(spark: SparkSession, view_dir: str) -> DataFrame:
 def compact(spark: SparkSession, view_dir: str) -> None:
     """Rewrite the accumulated state as ONE merged partition
     (``ingest_batch=-1``) via the crash-safe hide → commit → clean swap.
-    Run only while the stream is STOPPED (same double-count argument as
-    retrieval_index.compact)."""
+    Run only while the stream is STOPPED (the double-count argument in
+    streaming/compaction.py)."""
     for subdir, fold in (
         (MV_SUBDIR, _fold),
         (NATION_SUBDIR, lambda st: st.groupBy("n_name").agg(

@@ -6,7 +6,7 @@ micro-batches would re-mutate). The maintainable form is the CHANGE
 LOG: the base dimension load plus one append-only
 ``changes/ingest_batch=<b>`` partition per micro-batch of updates,
 each written with mode=overwrite so foreachBatch replay after a crash
-is idempotent (same protocol as streaming/retrieval_index.py). The
+is idempotent (the streaming/compaction.py protocol). The
 SCD2 history table is then a deterministic VIEW over base ∪ changes —
 per key, each version's valid_to is the NEXT version's valid_from
 (a lead window over per-key timelines, bounded by versions-per-key,

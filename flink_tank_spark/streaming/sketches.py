@@ -14,8 +14,8 @@ batch operators, so streamed estimates equal the from-scratch build
 exactly.
 
 Layout under ``sketch_dir`` (one partition per micro-batch, written
-with mode=overwrite for foreachBatch replay idempotency — the same
-argument as streaming/retrieval_index.py):
+with mode=overwrite for foreachBatch replay idempotency — the
+streaming/compaction.py protocol):
 
     cms_state/ingest_batch=<b>    row, col, cnt        (user frequency)
     hll_state/ingest_batch=<b>    event_type, register, rho  (user-days)
@@ -164,7 +164,7 @@ def compact(spark: SparkSession, sketch_dir: str) -> None:
     (``ingest_batch=-1`` — below any real batch id, so in-flight replay
     filters keep working) and drop the originals via the crash-safe
     hide → commit → clean swap. Run only while the stream is STOPPED
-    (same double-count argument as retrieval_index.compact)."""
+    (the double-count argument in streaming/compaction.py)."""
     for subdir in _SUBDIRS:
         compaction.recover(os.path.join(sketch_dir, subdir))
     merged = load_sketches(spark, sketch_dir)
