@@ -1,9 +1,15 @@
 # Developer entrypoints (mirrors .claude/skills/verify/SKILL.md)
 
-.PHONY: test verify bench slow-parity list kafka-e2e sf1 verify-sf1 bench-sf1 plan-audit
+.PHONY: test verify verify-sf01 bench slow-parity list kafka-e2e sf1 sf5 \
+	verify-sf1 bench-sf1 plan-audit conf-check bench-streaming \
+	bench-streaming-sf1 ivf-recall invariance-sf5 conf-curation bpe-curve \
+	bpe-envelope curation-sf1
 
+# the tier-1 suite, in the configuration ROADMAP.md names
 test:
-	python -m pytest tests/ -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+	  -p no:cacheprovider
 
 verify:
 	python scripts/verify_gate.py

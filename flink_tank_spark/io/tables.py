@@ -34,10 +34,6 @@ TABLES = (
 ALWAYS_BROADCAST = {"region", "nation"}
 
 
-def sf_dir_default() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")

@@ -72,16 +72,23 @@ def _bit(pos: Column) -> Column:
     )
 
 
-def bloom_words(keys: DataFrame, key_col: str, m_bits: int, k: int) -> DataFrame:
-    """Sparse word table (word, bits) — the MERGEABLE form of the
-    filter: tables from any key subsets fold by (word)-grouped bit_or
-    into exactly the table a one-pass build produces (OR is idempotent,
-    commutative, associative). The streaming sink persists this form;
-    :func:`bloom_build` densifies it for O(1) probing."""
+def bloom_build(keys: DataFrame, key_col: str, m_bits: int, k: int) -> DataFrame:
+    """1-row frame ``bloom: array<long>`` (index = word, value = 64-bit
+    word; dense, length m_bits/64) over every value of
+    ``keys[key_col]``. Insert is idempotent, so the input needs no
+    pre-distinct; the (word)-grouped ``bit_or`` is the only data-sized
+    shuffle and carries <= m/64 rows. Densification (left join against
+    ``range(m/64)``, array_sort by word, project bits) keeps probe
+    lookups O(1) — see the module docstring for why a map is not.
+
+    The sparse (word, bits) table is the MERGEABLE form of the filter:
+    tables from any key subsets fold by (word)-grouped bit_or into
+    exactly the table a one-pass build produces (OR is idempotent,
+    commutative, associative)."""
     if m_bits % 64 != 0:
         raise ValueError(f"m_bits must be a multiple of 64, got {m_bits}")
     pos = F.explode(F.array(*_positions(F.col(key_col), m_bits, k))).alias("pos")
-    return (
+    words = (
         keys.select(pos)
         .select(
             F.shiftright(F.col("pos"), 6).alias("word"),
@@ -90,17 +97,6 @@ def bloom_words(keys: DataFrame, key_col: str, m_bits: int, k: int) -> DataFrame
         .groupBy("word")
         .agg(F.bit_or("bit").alias("bits"))
     )
-
-
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int, k: int) -> DataFrame:
-    """1-row frame ``bloom: array<long>`` (index = word, value = 64-bit
-    word; dense, length m_bits/64) over every value of
-    ``keys[key_col]``. Insert is idempotent, so the input needs no
-    pre-distinct; the (word)-grouped ``bit_or`` is the only data-sized
-    shuffle and carries <= m/64 rows. Densification (left join against
-    ``range(m/64)``, array_sort by word, project bits) keeps probe
-    lookups O(1) — see the module docstring for why a map is not."""
-    words = bloom_words(keys, key_col, m_bits, k)
     dense = (
         keys.sparkSession.range(m_bits // 64)
         .select(F.col("id").alias("word"))

@@ -130,43 +130,6 @@ def char_ngrams(text: Column, k: int = 8) -> Column:
     return F.when(n >= k, grams).otherwise(F.array(text))
 
 
-def minhash_signature(shingles: Column, n_perms: int = 4) -> list[Column]:
-    """MinHash signature: ONE md5 per shingle, sliced into ``n_perms``
-    8-hex-char sub-hashes ("permutations"), min'd lexicographically.
-
-    One digest per shingle instead of one per (shingle, perm) — 4× less
-    hashing, the dominant cost of the shingling stage at corpus scale.
-    The 128-bit md5 is split into independent 32-bit lanes, plenty for
-    LSH banding. Requires n_perms <= 4 (32 hex chars / 8).
-    """
-    if n_perms > 4:
-        raise ValueError("md5-slice minhash supports at most 4 permutations")
-    # NOTE: callers should pass a MATERIALIZED hashed-array column (see
-    # dedup.minhash_signatures) — an inline expression would re-md5 the
-    # whole shingle set once per permutation.
-    return minhash_from_hashes(
-        F.transform(shingles, lambda s: F.md5(s.cast("binary"))), n_perms
-    )
-
-
-def minhash_from_hashes(
-    hashed: Column, n_perms: int = 4, offset: int = 0
-) -> list[Column]:
-    """Signature columns from an already-computed md5-array column: one
-    digest yields up to four independent 8-hex-char lanes. ``offset``
-    names the output columns ``mh_{offset}..`` so a second (salted)
-    digest can extend the signature past 4 permutations
-    (operators/dedup.minhash_from_shingled)."""
-    if n_perms > 4:
-        raise ValueError("one md5 digest yields at most 4 8-hex-char lanes")
-    return [
-        F.array_min(
-            F.transform(hashed, lambda h: F.substring(h, 8 * p + 1, 8))
-        ).alias(f"mh_{p + offset}")
-        for p in range(n_perms)
-    ]
-
-
 def lsh_band_buckets(mh_cols: list[Column], rows_per_band: int = 2) -> list[Column]:
     """Group MinHashes into bands; bucket id = md5 of the concatenated
     band. Docs sharing any band bucket are near-dup candidates."""

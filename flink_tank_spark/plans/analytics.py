@@ -339,24 +339,6 @@ EV_TYPE_TRANSITIONS_SQL = dedent("""
 # ev_value_outliers — exact-arithmetic z-score anomaly counts
 # --------------------------------------------------------------------------
 
-def value_hist_events(ev: DataFrame) -> DataFrame:
-    """Exact (type, day, scaled-value) counts — the micro-unit value
-    histogram. One map-side-combinable corpus scan; everything the
-    outlier monitor needs derives from this BOUNDED table (distinct
-    values per group, not rows)."""
-    return (
-        ev.select(
-            "event_type",
-            F.to_date("ts").alias("day"),
-            F.floor(F.col("value") * F.lit(1_000_000.0) + F.lit(0.5))
-            .cast("decimal(20,0)")
-            .alias("v"),
-        )
-        .groupBy("event_type", "day", "v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def _z2_ppm_sql(num: str, rhs: str) -> str:
     """Exact ``floor(num * 1e6 / rhs)`` staged so no intermediate exceeds
     ``max(num, rhs * 1000)`` — the naive ``num * 1000000`` overflows
@@ -384,11 +366,46 @@ def _z2_ppm_duck(num: str, rhs: str) -> str:
     )
 
 
-def outliers_from_hist(hist: DataFrame) -> DataFrame:
-    """Finalize the value histogram to the per-(type, day) outlier
-    report — shared by the batch query and the streaming fold, so
-    parity is structural. The z² comparison is pure integer arithmetic
-    (see ev_value_outliers docstring)."""
+def ev_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-(event_type, day) value-anomaly monitor: how many events sit
+    beyond 3 population standard deviations of their group, plus the
+    worst squared z-score — the data-quality tripwire a training-data
+    ingest runs next to the column profiler (plans/profile.py).
+
+    Exactness contract: the z² comparison is pure INTEGER arithmetic —
+    with v scaled to micro-units (the numeric.py recipe), n·s2 − s1²
+    = n²σ² and (n·v − s1)² = n²(v−μ)², so
+
+        |v − μ| > 3σ  ⇔  (n·v − s1)² > 9·(n·s2 − s1²)
+
+    with the n² cancelled: no division, no sqrt, no float — any
+    partitioning and the DuckDB oracle agree bit-for-bit. The reported
+    ``z2_max_ppm`` is exact floor division (z² ≤ n by Chebyshev, so the
+    ppm value fits a BIGINT at any group size).
+
+    Scale shape: ONE corpus scan builds the exact (type, day, value)
+    histogram (map-side combinable); stats, the z-test, and the counts
+    all run on that bounded table — repeated values are tested once and
+    counted by weight. Precision envelope: products stay in
+    DECIMAL(38,0); |n·v_s| < 1e18 holds for group counts up to ~1e9 at
+    this value domain (≤ 5e8 micro-units) — beyond that, shrink the
+    group grain (hourly) or drop the scale factor. The z2_ppm report
+    uses the staged multiply-divide of :func:`_z2_ppm_sql`, so it is
+    exact over the SAME envelope (no intermediate exceeds rhs·1000 ≈
+    6e37) — the naive diff²·10⁶ would overflow at rhs ≳ 1e32.
+    """
+    ev = load_table(spark, sf_dir, "events")
+    hist = (
+        ev.select(
+            "event_type",
+            F.to_date("ts").alias("day"),
+            F.floor(F.col("value") * F.lit(1_000_000.0) + F.lit(0.5))
+            .cast("decimal(20,0)")
+            .alias("v"),
+        )
+        .groupBy("event_type", "day", "v")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
     stats = hist.groupBy("event_type", "day").agg(
         F.sum("cnt").cast("decimal(12,0)").alias("n"),
         F.sum(F.col("v") * F.col("cnt")).alias("s1"),
@@ -423,38 +440,6 @@ def outliers_from_hist(hist: DataFrame) -> DataFrame:
         )
         .orderBy("event_type", "day")
     )
-
-
-def ev_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(event_type, day) value-anomaly monitor: how many events sit
-    beyond 3 population standard deviations of their group, plus the
-    worst squared z-score — the data-quality tripwire a training-data
-    ingest runs next to the column profiler (plans/profile.py).
-
-    Exactness contract: the z² comparison is pure INTEGER arithmetic —
-    with v scaled to micro-units (the numeric.py recipe), n·s2 − s1²
-    = n²σ² and (n·v − s1)² = n²(v−μ)², so
-
-        |v − μ| > 3σ  ⇔  (n·v − s1)² > 9·(n·s2 − s1²)
-
-    with the n² cancelled: no division, no sqrt, no float — any
-    partitioning and the DuckDB oracle agree bit-for-bit. The reported
-    ``z2_max_ppm`` is exact floor division (z² ≤ n by Chebyshev, so the
-    ppm value fits a BIGINT at any group size).
-
-    Scale shape: ONE corpus scan builds the exact (type, day, value)
-    histogram (map-side combinable); stats, the z-test, and the counts
-    all run on that bounded table — repeated values are tested once and
-    counted by weight. Precision envelope: products stay in
-    DECIMAL(38,0); |n·v_s| < 1e18 holds for group counts up to ~1e9 at
-    this value domain (≤ 5e8 micro-units) — beyond that, shrink the
-    group grain (hourly) or drop the scale factor. The z2_ppm report
-    uses the staged multiply-divide of :func:`_z2_ppm_sql`, so it is
-    exact over the SAME envelope (no intermediate exceeds rhs·1000 ≈
-    6e37) — the naive diff²·10⁶ would overflow at rhs ≳ 1e32.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    return outliers_from_hist(value_hist_events(ev))
 
 
 EV_VALUE_OUTLIERS_SQL = dedent(f"""

@@ -75,12 +75,11 @@ def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum — O(edges) shuffled work per round, 5 rounds; the final top-25
     is orderBy+limit (TakeOrderedAndProject), with the row_number window
     applied only to the already-limited 25-row frame."""
-    return pagerank_top(_pr_ranks(spark, sf_dir))
-
-
-def pagerank_top(pr: DataFrame, top_n: int = PR_TOPN) -> DataFrame:
-    """The top-N finalize over a (doc_id, degree, pr_scaled) rank table."""
-    top = pr.orderBy(F.col("pr_scaled").desc(), "doc_id").limit(top_n)
+    top = (
+        _pr_ranks(spark, sf_dir)
+        .orderBy(F.col("pr_scaled").desc(), "doc_id")
+        .limit(PR_TOPN)
+    )
     return top.withColumn(
         "rk",
         F.row_number()

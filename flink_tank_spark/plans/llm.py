@@ -78,8 +78,8 @@ def doc_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# One md5 per shingle, sliced into four 8-hex-char lanes (operators/text
-# .minhash_from_hashes) — 4× less hashing than per-permutation digests.
+# One md5 per shingle, sliced into four 8-hex-char lanes (operators/dedup
+# .minhash_from_shingled) — 4× less hashing than per-permutation digests.
 MINHASH_SQL_COLS = ",\n           ".join(
     f"list_min(list_transform(shingles, s -> substr(md5(s), {8 * p + 1}, 8))) AS mh_{p}"
     for p in range(4)
@@ -3215,30 +3215,24 @@ def doc_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: all counts are exact integers; jaccard_ppm is one
     integer floor-division on non-negative operands — Spark ``div``
     and DuckDB ``//`` both truncate toward zero (the layout.py
-    cross-engine rule), so values are bit-identical."""
+    cross-engine rule), so values are bit-identical.
+
+    The distinct (source, g) table ``sh`` is referenced four times
+    below (both self-join sides + the two sizes broadcasts) —
+    un-materialized, the whole upstream explode+distinct re-evaluated
+    per reference (profiled at sf0.1: four identical 3.7 M-row map
+    stages in one cold build, 23 jobs). Materialized once by
+    :func:`shared.cut` (r14, guide §2.4 — the established graph/LSH
+    discipline, reliable on a cluster). ``sizes`` likewise backs two
+    broadcasts and is one bounded row per source. Checkpointed values
+    are the computed values — results unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = (
+    sh = shared.cut(
         _shingled_docs(spark, sf_dir)
         .join(docs.select("doc_id", "source"), "doc_id")
         .select("source", F.explode("shingles").alias("g"))
         .distinct()
     )
-    return source_overlap_from_shingles(sh)
-
-
-def source_overlap_from_shingles(sh: DataFrame) -> DataFrame:
-    """Finalize: pairwise overlap from a DISTINCT (source, g) shingle
-    table.
-
-    ``sh`` is referenced four times below (both self-join sides + the
-    two sizes broadcasts) — un-materialized, the whole upstream
-    explode+distinct re-evaluated per reference (profiled at sf0.1:
-    four identical 3.7 M-row map stages in one cold build, 23 jobs).
-    Materialized once by :func:`shared.cut` (r14, guide §2.4 — the
-    established graph/LSH discipline, reliable on a cluster). ``sizes``
-    likewise backs two broadcasts and is one bounded row per source.
-    Checkpointed values are the computed values — results unchanged."""
-    sh = shared.cut(sh)
     sizes = shared.cut(sh.groupBy("source").agg(F.count(F.lit(1)).alias("n")))
     common = (
         sh.select(F.col("source").alias("source_a"), "g")

@@ -28,9 +28,8 @@ Scale shape at 100 TB:
 - the global bottom-k is orderBy+limit → TakeOrderedAndProject: each
   task keeps its local k, the driver merges P·k rows — never a global
   sort, never a single-reducer window;
-- the winning-ticket table is ≤ k rows — broadcastable state, which is
-  exactly what the streaming twin (streaming/wsample.py) folds
-  incrementally: bottom-k is a KMV-style mergeable sketch
+- the winning-ticket table is ≤ k rows — broadcastable state, and
+  bottom-k is a KMV-style mergeable sketch
   (bottom_k(A ∪ B) = bottom_k(bottom_k(A) ∪ bottom_k(B))).
 """
 
@@ -50,44 +49,38 @@ SAMPLE_K = 50      # winning tickets per draw
 TICKET_CAP = 32    # max ballots per document (bounds the explode)
 
 
-def doc_weights(docs: DataFrame) -> DataFrame:
-    """(doc_id, w): whitespace token count capped at TICKET_CAP —
-    the sampling weight. Kept minimal so the ticket stage never carries
-    text."""
-    return docs.select(
-        "doc_id",
-        F.least(
-            F.size(F.split(F.col("text"), " ")), F.lit(TICKET_CAP)
-        ).cast("long").alias("w"),
-    )
-
-
-def ticket_ballots(weights: DataFrame) -> DataFrame:
-    """Explode each doc into its w tickets with md5 priorities.
-    Bounded fanout (≤ TICKET_CAP), codegen md5 — no Python."""
-    return weights.select(
-        "doc_id",
-        "w",
-        F.explode(F.sequence(F.lit(0), F.col("w") - 1)).alias("t"),
-    ).withColumn(
-        "pr",
-        F.md5(F.concat_ws(":", F.col("doc_id"), F.col("t")).cast("binary")),
-    )
-
-
-def bottom_k_tickets(tickets: DataFrame, k: int = SAMPLE_K) -> DataFrame:
-    """The k globally smallest ticket priorities (ties broken by
-    doc_id, t — md5 collisions are astronomically unlikely but the
-    order must be total for determinism). orderBy+limit lowers to
-    TakeOrderedAndProject — per-partition local k, driver merge."""
-    return tickets.orderBy("pr", "doc_id", "t").limit(k)
-
-
 def weighted_sample(docs: DataFrame, k: int = SAMPLE_K) -> DataFrame:
     """The sampled documents: distinct holders of winning tickets, with
     their weight, number of winning tickets, and best (smallest)
-    priority."""
-    wins = bottom_k_tickets(ticket_ballots(doc_weights(docs)), k)
+    priority.
+
+    - weight w = whitespace token count capped at TICKET_CAP, kept
+      minimal so the ticket stage never carries text;
+    - each doc explodes into its w tickets with md5 priorities: bounded
+      fanout (≤ TICKET_CAP), codegen md5, no Python;
+    - the k globally smallest priorities win, ties broken by doc_id, t
+      (md5 collisions are astronomically unlikely but the order must be
+      total for determinism). orderBy+limit lowers to
+      TakeOrderedAndProject: per-partition local k, driver merge."""
+    wins = (
+        docs.select(
+            "doc_id",
+            F.least(
+                F.size(F.split(F.col("text"), " ")), F.lit(TICKET_CAP)
+            ).cast("long").alias("w"),
+        )
+        .select(
+            "doc_id",
+            "w",
+            F.explode(F.sequence(F.lit(0), F.col("w") - 1)).alias("t"),
+        )
+        .withColumn(
+            "pr",
+            F.md5(F.concat_ws(":", F.col("doc_id"), F.col("t")).cast("binary")),
+        )
+        .orderBy("pr", "doc_id", "t")
+        .limit(k)
+    )
     return (
         wins.groupBy("doc_id", "w")
         .agg(
@@ -295,7 +288,17 @@ def doc_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Single-token documents carry no bigram evidence and are excluded
     (both engines). Precision: products ≤ (counts+B)² · 10⁶ stay in
     DECIMAL(38,0)/HUGEINT for corpora to ~10¹⁵ bigrams."""
-    return dsir_weights_from_counts(_dsir_doc_bucket_counts(spark, sf_dir))
+    return (
+        dsir_doc_scores(_dsir_doc_bucket_counts(spark, sf_dir))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.expr("sum(score_ppm) div count(1)").cast("long").alias("avg_score_ppm"),
+            F.max("score_ppm").alias("max_score_ppm"),
+            F.min("score_ppm").alias("min_score_ppm"),
+        )
+        .orderBy("lang")
+    )
 
 
 DSIR_TOPK = 20  # the selection cut doc_dsir_topk ships
@@ -319,7 +322,7 @@ def doc_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsir_doc_scores(dbc: DataFrame) -> DataFrame:
     """Per-document DSIR importance scores (doc_id, lang, score_ppm)
     from an already-built (doc_id, lang, bkt, c) table — the shared
-    core of :func:`dsir_weights_from_counts` and the curation job's
+    core of :func:`doc_dsir_weights` and the curation job's
     optional scoring stage (jobs/curation_job.py). Single-token docs
     carry no bigram evidence and are absent."""
     raw_b = dbc.groupBy("bkt").agg(
@@ -353,22 +356,6 @@ def dsir_doc_scores(dbc: DataFrame) -> DataFrame:
         .agg(
             F.expr("sum(c * w_ppm) div sum(c)").cast("long").alias("score_ppm")
         )
-    )
-
-
-def dsir_weights_from_counts(dbc: DataFrame) -> DataFrame:
-    """The per-language DSIR score summary from an already-built
-    (doc_id, lang, bkt, c) table: the ≤256-row weight table and every
-    aggregate are pure algebra over the mergeable bucket counts."""
-    return (
-        dsir_doc_scores(dbc).groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.expr("sum(score_ppm) div count(1)").cast("long").alias("avg_score_ppm"),
-            F.max("score_ppm").alias("max_score_ppm"),
-            F.min("score_ppm").alias("min_score_ppm"),
-        )
-        .orderBy("lang")
     )
 
 

@@ -605,21 +605,6 @@ EV_SALTED_COUNTS_SQL = dedent("""
 TOPN_K = 3
 
 
-def hourly_top_users_from_counts(counts: DataFrame) -> DataFrame:
-    """Finalize (window_start, user_id, n_events) counts to the
-    deterministic per-window top-3 — ONE definition shared by the batch
-    query and the streaming-incremental twin (streaming/topk.py), so
-    parity is structural, not coincidental."""
-    from flink_tank_spark.operators.rank import salted_topk
-
-    order = [F.col("n_events").desc(), F.col("user_id").asc()]
-    return (
-        salted_topk(counts, ["window_start"], order, "user_id", TOPN_K)
-        .select("window_start", "rank", "user_id", "n_events")
-        .orderBy("window_start", "rank")
-    )
-
-
 def ev_hourly_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per tumbling hour: the 3 most active users — Flink's windowed
     TopN, the leaderboard shape next to ev_tumbling_hourly's plain
@@ -630,13 +615,20 @@ def ev_hourly_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (operators/rank.salted_topk) — never a row_number over a
     whole window's users (100 M rows through one task at lake scale).
     """
+    from flink_tank_spark.operators.rank import salted_topk
+
     ev = load_table(spark, sf_dir, "events")
     counts = (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "user_id", "n_events")
     )
-    return hourly_top_users_from_counts(counts)
+    order = [F.col("n_events").desc(), F.col("user_id").asc()]
+    return (
+        salted_topk(counts, ["window_start"], order, "user_id", TOPN_K)
+        .select("window_start", "rank", "user_id", "n_events")
+        .orderBy("window_start", "rank")
+    )
 
 
 EV_HOURLY_TOP_USERS_SQL = dedent(f"""

@@ -3,10 +3,9 @@
 Walks the static import graph (absolute and relative imports, at any
 nesting depth) from the entry points: ``__spark_entry__.py``,
 ``bench.py``, the job and tool mains, and the query registry. Fails on
-any ``flink_tank_spark`` module the walk does not reach, other than the
-twins listed as pending deletion: a module that only its own tests and
-scripts import is a second implementation that nothing runs.
-Spark-free.
+any ``flink_tank_spark`` module the walk does not reach: a module that
+only its own tests and scripts import is a second implementation that
+nothing runs. Spark-free.
 """
 
 from __future__ import annotations
@@ -27,20 +26,6 @@ ROOT_FILES = (
 # `spark.python.daemon.module` conf and every Python worker daemon
 # starts it with `python -m`.
 ROOT_MODULES = ("flink_tank_spark.spark_daemon",)
-
-# Streaming twins that only their own tests import, kept for one more
-# change so a single change does not take away too many tests at once.
-# Delete them (and their tests) next; this list must then be empty.
-PENDING_DELETION = (
-    "flink_tank_spark.streaming.compaction",
-    "flink_tank_spark.streaming.dedup",
-    "flink_tank_spark.streaming.joins",
-    "flink_tank_spark.streaming.matview",
-    "flink_tank_spark.streaming.scd",
-    "flink_tank_spark.streaming.sketches",
-    "flink_tank_spark.streaming.topk",
-    "flink_tank_spark.streaming.wsample",
-)
 
 
 def _module_name(path: Path) -> str:
@@ -94,4 +79,4 @@ def unreachable_modules() -> list[str]:
 
 
 def test_every_engine_module_is_reachable_from_an_entry_point():
-    assert unreachable_modules() == sorted(PENDING_DELETION)
+    assert unreachable_modules() == []

@@ -167,110 +167,6 @@ def test_error_stream_end_to_end(spark, tmp_path):
     assert vals[0]["errorType"] == "PARSE_ERROR"
 
 
-def test_stream_dedup_drops_redeliveries_across_batches(spark, tmp_path):
-    """dropDuplicatesWithinWatermark state must survive micro-batches:
-    a re-delivered event id in a LATER batch (within the watermark
-    horizon) is dropped; fresh ids pass."""
-    from flink_tank_spark.streaming.dedup import dedup_stream
-
-    src = str(tmp_path / "in")
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-
-    def run_available(msgs, batch_name):
-        _write_batch(src, batch_name, msgs)
-        raw = read_jsonl_stream(spark, src)
-        parsed = raw.select(
-            F.get_json_object("value", "$.event_id").alias("event_id"),
-            F.to_timestamp(F.get_json_object("value", "$.ts")).alias("ts"),
-        )
-        deduped = dedup_stream(parsed, ["event_id"], ts_col="ts", delay="1 hour")
-        q = (
-            deduped.select(F.to_json(F.struct("event_id", "ts")).alias("value"))
-            .writeStream.format("text")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    def mk(eid, ts):
-        return json.dumps({"event_id": eid, "ts": ts})
-
-    run_available(
-        [mk("e1", "2024-01-01 10:00:00"), mk("e2", "2024-01-01 10:00:05"),
-         mk("e1", "2024-01-01 10:00:07")],  # same-batch duplicate
-        "b1",
-    )
-    run_available(
-        [mk("e1", "2024-01-01 10:01:00"),   # cross-batch re-delivery -> dropped
-         mk("e3", "2024-01-01 10:01:30")],  # fresh -> kept
-        "b2",
-    )
-
-    out = []
-    for fn in os.listdir(out_dir):
-        if fn.startswith("part-"):
-            with open(os.path.join(out_dir, fn)) as f:
-                out += [json.loads(line) for line in f if line.strip()]
-    ids = sorted(e["event_id"] for e in out)
-    assert ids == ["e1", "e2", "e3"]
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Watermark-bounded stream-stream inner join: clicks attribute to a
-    view of the same user within 10 minutes; out-of-window or other-user
-    clicks don't match."""
-    from flink_tank_spark.streaming.joins import stream_interval_join
-
-    views_dir = str(tmp_path / "views")
-    clicks_dir = str(tmp_path / "clicks")
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-
-    def mk(dirpath, name, rows):
-        _write_batch(dirpath, name, [json.dumps(r) for r in rows])
-
-    mk(views_dir, "v1", [
-        {"user": "u1", "view_ts": "2024-01-01 10:00:00"},
-        {"user": "u2", "view_ts": "2024-01-01 10:00:00"},
-    ])
-    mk(clicks_dir, "c1", [
-        {"user": "u1", "click_ts": "2024-01-01 10:05:00"},   # in window
-        {"user": "u1", "click_ts": "2024-01-01 10:20:00"},   # too late
-        {"user": "u3", "click_ts": "2024-01-01 10:01:00"},   # no view
-    ])
-
-    views = read_jsonl_stream(spark, views_dir).select(
-        F.get_json_object("value", "$.user").alias("user"),
-        F.to_timestamp(F.get_json_object("value", "$.view_ts")).alias("view_ts"),
-    )
-    clicks = read_jsonl_stream(spark, clicks_dir).select(
-        F.get_json_object("value", "$.user").alias("user"),
-        F.to_timestamp(F.get_json_object("value", "$.click_ts")).alias("click_ts"),
-    )
-    joined = stream_interval_join(
-        views, clicks, key="user", left_ts="view_ts", right_ts="click_ts"
-    )
-    q = (
-        joined.select(F.to_json(F.struct("user", "view_ts", "click_ts")).alias("value"))
-        .writeStream.format("text")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    out = []
-    for fn in os.listdir(out_dir):
-        if fn.startswith("part-"):
-            with open(os.path.join(out_dir, fn)) as f:
-                out += [json.loads(line) for line in f if line.strip()]
-    assert [(e["user"], e["click_ts"]) for e in out] == [("u1", "2024-01-01T10:05:00.000Z")]
-
-
 def test_dual_sink_foreachbatch_routes_both_outputs(spark, tmp_path):
     """One query + one checkpoint feeding both outputs (one foreachBatch
     writer routing rows by tag): processed and error records land in
