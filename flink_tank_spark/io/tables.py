@@ -28,11 +28,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at ANY scale factor: region
-# and nation are fixed-cardinality (5 / 25 rows) regardless of SF, so
-# joins against them must never shuffle the fact side.
-ALWAYS_BROADCAST = {"region", "nation"}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:

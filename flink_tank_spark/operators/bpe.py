@@ -47,7 +47,6 @@ from pyspark.sql import functions as F
 from flink_tank_spark.plans import shared
 
 WORD_REGEX = r"([a-z]+)"
-END_MARK = "</w>"
 
 # seed segmentation: one symbol per character + the end-of-word marker
 _SEED_EXPR = (

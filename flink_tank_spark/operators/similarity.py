@@ -49,10 +49,6 @@ def norm(a: Column) -> Column:
     return F.sqrt(_fp_sum(F.transform(a, lambda x: x * x)))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def as_double_array(a: Column) -> Column:
     """float32 → double promotion (exact) so all math runs in double."""
     return F.transform(a, lambda x: x.cast("double"))

@@ -38,18 +38,11 @@ def main() -> int:
         os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    from flink_tank_spark.session import get_spark
+
+    spark = get_spark("bench-streaming", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     from flink_tank_spark.jobs.ingest_job import start_ingest
@@ -125,17 +118,11 @@ def main() -> int:
         pe = parse_processed_events(spark.read.parquet(ok_dir))
         job2 = {}
         job2_ok = True
-        # (key cardinality, state-store provider). The 1M-key case is
-        # the state-SCALE soak: per-event-unique keys (full hash, no
-        # pool fold) and the RocksDB provider, which keeps the state
-        # rows off-heap/spillable — the configuration a 100 TB/day
-        # deployment runs; at small SFs the actual key count is bounded
-        # by the event count and reported as expected_keys.
-        ROCKSDB = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-        for n_keys, provider in ((50, None), (50_000, None), (1_000_000, ROCKSDB)):
+        # Every case runs the session's RocksDB state store. The 1M-key
+        # case is the state-SCALE soak: per-event-unique keys (full
+        # hash, no pool fold); at small SFs the actual key count is
+        # bounded by the event count and reported as expected_keys.
+        for n_keys in (50, 50_000, 1_000_000):
             src2 = os.path.join(work, f"job2-src-{n_keys}")
             chk3 = os.path.join(work, f"chk3-{n_keys}")
             key_col = (
@@ -175,13 +162,6 @@ def main() -> int:
             # Bound the run by polling progress until every input row is
             # committed, then stop — wall measures the DATA path (the
             # throughput question) plus whatever timers fired during it.
-            prev_provider = spark.conf.get(
-                "spark.sql.streaming.stateStore.providerClass", None
-            )
-            if provider:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", provider
-                )
             t0 = time.perf_counter()
             q = (
                 metrics.writeStream.format("noop")
@@ -211,16 +191,6 @@ def main() -> int:
                 time.sleep(0.2)
             q.stop()
             q.awaitTermination(60)
-            if provider:
-                if prev_provider is None:
-                    spark.conf.unset(
-                        "spark.sql.streaming.stateStore.providerClass"
-                    )
-                else:
-                    spark.conf.set(
-                        "spark.sql.streaming.stateStore.providerClass",
-                        prev_provider,
-                    )
             j2_wall = (drained_at or time.perf_counter()) - t0
             job2[f"keys{n_keys}"] = {
                 "events_per_sec": round(processed / j2_wall, 1),
@@ -228,7 +198,6 @@ def main() -> int:
                 "state_rows": state_rows,
                 "expected_rows": expect_rows,
                 "expected_keys": expect_keys,
-                "state_store": "rocksdb" if provider else "hdfs-backed",
             }
             job2_ok = job2_ok and state_rows == expect_rows
 

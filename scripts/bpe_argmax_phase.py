@@ -24,9 +24,9 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
 
 from flink_tank_spark.operators import bpe  # noqa: E402
+from flink_tank_spark.session import get_spark  # noqa: E402
 from scripts.bpe_scale_curve import synth_vocab, synth_vocab_multiscript  # noqa: E402
 
 
@@ -35,14 +35,7 @@ def main() -> None:
     n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 256
     out_path = sys.argv[3] if len(sys.argv) > 3 else "BPE_ARGMAX_PHASE_r14.json"
     generator = sys.argv[4] if len(sys.argv) > 4 else "multiscript"
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("bpe-argmax-phase", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
     gen = {"latin": synth_vocab, "multiscript": synth_vocab_multiscript}[generator]
     words = bpe.seed_symbols(

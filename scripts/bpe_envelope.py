@@ -28,10 +28,10 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from flink_tank_spark.operators import bpe  # noqa: E402
+from flink_tank_spark.session import get_spark  # noqa: E402
 from scripts.bpe_scale_curve import synth_vocab  # noqa: E402
 
 
@@ -50,14 +50,7 @@ def _peak_mb() -> float:
 def main() -> None:
     n_vocab = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     out_path = sys.argv[2] if len(sys.argv) > 2 else "BPE_SCALE_r12.json"
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("bpe-envelope", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     report: dict = {"vocab_size": n_vocab, "rss_mb_start": _rss_mb()}

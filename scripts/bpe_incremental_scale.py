@@ -40,10 +40,10 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from flink_tank_spark.operators import bpe  # noqa: E402
+from flink_tank_spark.session import get_spark  # noqa: E402
 from scripts.bpe_scale_curve import synth_vocab, synth_vocab_multiscript  # noqa: E402
 
 
@@ -53,14 +53,7 @@ def main() -> None:
     out_path = sys.argv[3] if len(sys.argv) > 3 else "BPE_SCALE_r13.json"
     generator = sys.argv[4] if len(sys.argv) > 4 else "latin"
     unbatched_full = bool(int(sys.argv[5])) if len(sys.argv) > 5 else False
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark("bpe-incremental-scale", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     gen = {"latin": synth_vocab, "multiscript": synth_vocab_multiscript}[generator]

@@ -27,9 +27,9 @@ import time
 
 sys.path.insert(0, ".")
 
-from pyspark.sql import SparkSession  # noqa: E402
 
 from flink_tank_spark.operators import bpe  # noqa: E402
+from flink_tank_spark.session import get_spark  # noqa: E402
 
 
 def synth_vocab(n_words: int, seed: int = 11) -> list[tuple[str, int]]:
@@ -83,13 +83,7 @@ def synth_vocab_multiscript(n_words: int, seed: int = 11) -> list[tuple[str, int
 def main() -> None:
     n_vocab = int(sys.argv[1]) if len(sys.argv) > 1 else 20000
     out_path = sys.argv[2] if len(sys.argv) > 2 else "BPE_SCALE_r11.json"
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("bpe-scale-curve", cpus=16)
     spark.sparkContext.setLogLevel("ERROR")
     vocab = synth_vocab(n_vocab)
     words = bpe.seed_symbols(

@@ -1,7 +1,7 @@
 """Exercise conf/spark-defaults-100tb.conf AS CODE (round 6).
 
 The 100 TB conf was prose + one pinned bloom-filter test; this script
-boots a session with the conf's actual knobs and proves, executably,
+sets the conf's actual knobs on the get_spark session and proves, executably,
 that the cluster configuration does not break or silently re-plan the
 engine:
 
@@ -18,8 +18,10 @@ engine:
    different thresholds is legitimate and listed, a nested loop is
    never).
 
-Cluster-only keys are remapped for local execution (reasons printed):
-``spark.checkpoint.dir`` (hdfs:// → local tmp) and
+Every key a running session takes (the SQL knobs) is set with
+``spark.conf.set``. The core Spark keys it rejects are left to the
+launcher and listed: ``spark.checkpoint.dir`` (hdfs://; the local
+master cuts lineage with local checkpoints anyway) and
 ``spark.dynamicAllocation.*`` / ``spark.speculation*`` (need a cluster
 manager / external shuffle; no plan impact — they schedule tasks, not
 queries).
@@ -36,7 +38,6 @@ import json
 import os
 import re
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -45,13 +46,6 @@ CONF_PATH = os.path.join(
     "conf",
     "spark-defaults-100tb.conf",
 )
-
-# keys that require a cluster manager / HDFS; everything else is applied
-LOCAL_REMAP = {
-    "spark.checkpoint.dir": None,  # replaced with a local tmp dir
-    "spark.dynamicAllocation.enabled": "false",
-    "spark.dynamicAllocation.shuffleTracking.enabled": "false",
-}
 
 SUBSET = [
     # join-heavy TPC-H (broadcast + SMJ + semi-join shapes)
@@ -86,21 +80,18 @@ def parse_conf(path: str) -> dict[str, str]:
     return out
 
 
-def build_session(conf: dict[str, str], cpus: int, app: str):
-    from pyspark.sql import SparkSession
+def apply_conf(spark, conf: dict[str, str]) -> list[str]:
+    """Set every key of ``conf`` that a running session takes; return
+    the keys only a launcher can set."""
+    from pyspark.errors import AnalysisException
 
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
+    left = []
     for k, v in conf.items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+        try:
+            spark.conf.set(k, v)
+        except AnalysisException:  # CANNOT_MODIFY_CONFIG: a core Spark key
+            left.append(k)
+    return sorted(left)
 
 
 def join_mix(plan: str) -> dict[str, int]:
@@ -125,35 +116,20 @@ def collect_plans(spark, sf_dir: str) -> dict[str, dict[str, int]]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 16
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(cpus))
 
     import duckdb
 
+    from flink_tank_spark.session import get_spark
     from scripts.verify_gate import TABLES, _hash
 
-    conf = parse_conf(CONF_PATH)
-    applied, remapped = {}, {}
-    for k, v in conf.items():
-        if k in LOCAL_REMAP:
-            if LOCAL_REMAP[k] is not None:
-                applied[k] = LOCAL_REMAP[k]
-            remapped[k] = v
-        else:
-            applied[k] = v
-    applied["spark.checkpoint.dir"] = tempfile.mkdtemp(prefix="conf100tb-chk-")
-
     # ---- phase 1: default-session plans (baseline join mix) ----------
-    from flink_tank_spark.session import get_spark
-
-    base = get_spark("conf-100tb-baseline", cpus=cpus)
-    base.sparkContext.setLogLevel("ERROR")
-    base_mix = collect_plans(base, sf_dir)
-    base.stop()
-
-    # ---- phase 2: 100 TB session — plans + oracle subset -------------
-    spark = build_session(applied, cpus, "conf-100tb-check")
+    spark = get_spark("conf-100tb-check", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.setCheckpointDir(applied["spark.checkpoint.dir"])
+    base_mix = collect_plans(spark, sf_dir)
+
+    # ---- phase 2: 100 TB conf — plans + oracle subset ----------------
+    conf = parse_conf(CONF_PATH)
+    left = apply_conf(spark, conf)
     tb_mix = collect_plans(spark, sf_dir)
 
     flips = {
@@ -194,8 +170,8 @@ def main() -> int:
     print(json.dumps({
         "metric": "conf_100tb_check",
         "sf": sf_dir.rstrip("/").rsplit("sf", 1)[-1],
-        "conf_keys_applied": len(applied),
-        "conf_keys_remapped_for_local": sorted(remapped),
+        "conf_keys_applied": len(conf) - len(left),
+        "conf_keys_left_to_launcher": left,
         "subset_queries": len(SUBSET),
         "subset_mismatches": mismatches,
         "join_mix_flips": flips,

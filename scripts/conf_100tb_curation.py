@@ -7,11 +7,12 @@ decontamination → funnel stats — executed twice at the given SF:
 
 1. under the DEFAULT test session (the configuration every gate runs);
 2. under conf/spark-defaults-100tb.conf (8192 shuffle partitions, AQE
-   skew join, runtime bloom filters, RocksDB state store), with
-   spark.checkpoint.dir remapped to a local tmp dir. The master stays
-   local[N], so lineage cuts stay local checkpoints: plans/shared.py
-   takes the reliable path from a cluster master only, and the slow
-   tests/test_cluster_checkpoint.py runs that path on local-cluster.
+   skew join, runtime bloom filters, RocksDB state store), its runtime
+   keys set on a fresh get_spark session as in conf_100tb_check. The
+   master stays local[N], so lineage cuts stay local checkpoints:
+   plans/shared.py takes the reliable path from a cluster master only,
+   and the slow tests/test_cluster_checkpoint.py runs that path on
+   local-cluster.
 
 Asserts the stage funnels are IDENTICAL (the cluster conf must not
 change results) and that the 100 TB plan introduces no
@@ -28,15 +29,13 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from scripts.conf_100tb_check import (  # noqa: E402
     CONF_PATH,
-    LOCAL_REMAP,
-    build_session,
+    apply_conf,
     join_mix,
     parse_conf,
 )
@@ -69,7 +68,6 @@ def main() -> int:
     ap.add_argument("cpus", nargs="?", type=int, default=16)
     ap.add_argument("out", nargs="?", default="CONF100TB_CURATION_r11.json")
     args = ap.parse_args()
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(args.cpus))
 
     # pass 1: default test session
     from flink_tank_spark.session import get_spark
@@ -79,21 +77,11 @@ def main() -> int:
     funnel_def, mix_def, wall_def = run_job(spark, args.sf_dir)
     spark.stop()
 
-    # pass 2: the 100 TB conf (cluster-only keys remapped as in
-    # conf_100tb_check)
-    conf = parse_conf(CONF_PATH)
-    applied, remapped = {}, []
-    for k, v in conf.items():
-        if k in LOCAL_REMAP:
-            if LOCAL_REMAP[k] is not None:
-                applied[k] = LOCAL_REMAP[k]
-            remapped.append(k)
-        else:
-            applied[k] = v
-    spark = build_session(applied, args.cpus, "curation-100tb")
+    # pass 2: the 100 TB conf on a fresh session (a new application id,
+    # so no shared stage of pass 1 is reused)
+    spark = get_spark("curation-100tb", cpus=args.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    ckpt = tempfile.mkdtemp(prefix="curation_ckpt_")
-    spark.sparkContext.setCheckpointDir(ckpt)
+    left = apply_conf(spark, parse_conf(CONF_PATH))
     funnel_tb, mix_tb, wall_tb = run_job(spark, args.sf_dir)
     spark.stop()
 
@@ -112,7 +100,7 @@ def main() -> int:
         "join_mix_default": mix_def,
         "join_mix_100tb": mix_tb,
         "forbidden_joins_introduced": forbidden,
-        "conf_keys_remapped_for_local": remapped,
+        "conf_keys_left_to_launcher": left,
         "ok": funnel_def == funnel_tb and not forbidden,
     }
     print(json.dumps(result))

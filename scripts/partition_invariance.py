@@ -43,21 +43,13 @@ def main() -> int:
     cpus = int(args[1]) if len(args) > 1 else 8
     shuffle = int(args[2]) if len(args) > 2 else cpus
 
-    from pyspark.sql import SparkSession
+    from flink_tank_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
+    spark = get_spark("partition-invariance", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
+    # the exact layout under test: no AQE coalescing back toward cores
+    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
 
     from flink_tank_spark.plans.registry import all_queries
 

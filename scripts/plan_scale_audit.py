@@ -22,10 +22,11 @@ Usage:
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 JOIN_OPS = (
     "BroadcastHashJoin",
@@ -42,23 +43,15 @@ def join_mix(plan: str) -> dict[str, int]:
 
 def main() -> int:
     dir_a = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dir_b = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/data/sf1"
+    dir_b = sys.argv[2] if len(sys.argv) > 2 else "data/sf1"
     cpus = int(sys.argv[3]) if len(sys.argv) > 3 else 8
-
-    from pyspark.sql import SparkSession
 
     from flink_tank_spark.plans import shared
     from flink_tank_spark.plans.registry import all_queries
+    from flink_tank_spark.session import get_spark
 
     shared.DISABLE = True  # full plans, no InMemoryTableScan over cache
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-scale-audit", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     flips = 0

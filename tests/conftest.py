@@ -1,6 +1,9 @@
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
@@ -49,3 +52,36 @@ def cluster_mode(spark, tmp_path, monkeypatch):
     yield ckpt
     shared.clear(spark)
     getattr(jsc, "checkpointDir_$eq")(prev_dir)
+
+
+@pytest.fixture
+def spark_submit(tmp_path):
+    """Run a Python driver under spark-submit, the way the k8s manifests
+    launch the jobs: ``run(source, master, conf, *args)`` submits
+    ``source`` with ``--master master`` and a ``--conf`` per item of
+    ``conf``, asserts it exits 0 and returns its stdout. Executors
+    inherit PYTHONPATH, so their workers find the package and its
+    daemon module."""
+    import pyspark
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+
+    def run(source: str, master: str, conf: dict[str, str], *args: str) -> str:
+        driver = tmp_path / "driver.py"
+        driver.write_text(textwrap.dedent(source))
+        cmd = [submit, "--master", master]
+        for k, v in {"spark.ui.enabled": "false", **conf}.items():
+            cmd += ["--conf", f"{k}={v}"]
+        proc = subprocess.run(
+            cmd + [str(driver), *args],
+            capture_output=True,
+            text=True,
+            timeout=600,
+            env=dict(os.environ, PYTHONPATH=repo, PYSPARK_PYTHON=sys.executable),
+            cwd=repo,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
+        return proc.stdout
+
+    return run

@@ -5,12 +5,16 @@ nesting depth) from the entry points: ``__spark_entry__.py``,
 ``bench.py``, the job and tool mains, and the query registry. Fails on
 any ``flink_tank_spark`` module the walk does not reach: a module that
 only its own tests and scripts import is a second implementation that
-nothing runs. Spark-free.
+nothing runs. A second check fails on any Python file that builds its
+own SparkSession, except the session factory and the local gate, so
+every job, bench, script and test runs the one session config.
+Spark-free.
 """
 
 from __future__ import annotations
 
 import ast
+import textwrap
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -26,6 +30,10 @@ ROOT_FILES = (
 # `spark.python.daemon.module` conf and every Python worker daemon
 # starts it with `python -m`.
 ROOT_MODULES = ("flink_tank_spark.spark_daemon",)
+# session.get_spark is the one session builder; scripts/verify_gate.py
+# mirrors the plain session the external driver builds around
+# __spark_entry__.
+SESSION_BUILDERS = (PKG / "session.py", REPO / "scripts" / "verify_gate.py")
 
 
 def _module_name(path: Path) -> str:
@@ -78,5 +86,45 @@ def unreachable_modules() -> list[str]:
     )
 
 
+def _uses_builder(source: str) -> bool:
+    """``SparkSession.builder`` in ``source`` or in a string of it that
+    parses as Python (a driver script run in a subprocess)."""
+    try:
+        tree = ast.parse(source)
+    except SyntaxError:
+        return False
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "builder"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "SparkSession"
+        ):
+            return True
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and "SparkSession" in node.value
+            and _uses_builder(textwrap.dedent(node.value))
+        ):
+            return True
+    return False
+
+
+def private_session_builders() -> list[str]:
+    """Python files outside SESSION_BUILDERS that use ``SparkSession.builder``."""
+    return [
+        str(path.relative_to(REPO))
+        for path in sorted(REPO.rglob("*.py"))
+        if path not in SESSION_BUILDERS
+        and not any(p.startswith(".") for p in path.relative_to(REPO).parts)
+        and _uses_builder(path.read_text())
+    ]
+
+
 def test_every_engine_module_is_reachable_from_an_entry_point():
     assert unreachable_modules() == []
+
+
+def test_only_the_session_factory_and_the_gate_build_sessions():
+    assert private_session_builders() == []
